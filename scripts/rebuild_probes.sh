@@ -19,11 +19,6 @@
 # Measurement commands the surfaces feed (run after the build):
 #   SPARK_GRAFT_SF_DIR=/tmp/sf1  scripts/run_verify.sh x x graft.Bench
 #   scripts/run_verify.sh /root/testdata/sf0.1 /tmp/sf1 graft.BenchScale 10 /root/repo/BENCH_SF1.json
-#   scripts/run_verify.sh /tmp/sf1d 10 graft.DensityProbe            # per decade
-#   scripts/run_verify.sh /tmp/sf1d 10 graft.LmDecadeProbe           # t24/t35 ladder
-#   SPARK_GRAFT_SHUFFLE=256 scripts/run_verify.sh /tmp/sf100d 1000 graft.LmDecadeProbe nowarm
-#   scripts/run_verify.sh /tmp/sf100w 1000 graft.DensityProbe skip_s12 nowarm
-#   scripts/run_verify.sh /tmp/sf100d 64 graft.BucketProbe           # co-location lever
 #   scripts/run_verify.sh q25_interval_join /tmp/sf100d graft.BenchOne 2
 #   (relational 1000x probe = BenchOne over q01/q04/q05/q13/q25/q39/q48/q56/q57;
 #    SPARK_GRAFT_SHUFFLE=256 halves q25 at 1000x — see PERF.md)

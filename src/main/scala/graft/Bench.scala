@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Env
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and prints
@@ -9,36 +10,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** The bench session config, shared with [[BenchScale]] so sf0.1 and
-    * scaled-up numbers are measured under identical settings. */
-  def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // default: one shuffle partition per core. SPARK_GRAFT_SHUFFLE
-      // overrides for large-SF probes — at 1000× base a fixed 32 means
-      // ~19 M-row partitions that spill; sizing partitions to the data
-      // (AQE coalesces the small ones back) is the same knob a cluster
-      // run turns, measured in PERF.md's 1000× relational probe
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // shuffled hash join beats sort-merge when neither side needs a sort;
-      // at cluster scale the same flag holds for the non-skewed joins here
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // no-op unless the testdata regenerates as TIMESTAMP(NANOS), in which
-      // case the scan yields Long nanos and Tables.normalizeEventTs
-      // re-dispatches instead of the scan throwing before dispatch
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
+  /** The bench session, shared with [[BenchScale]] and the perfbench
+    * harness so every timed run uses the same settings. */
+  def buildSession(cpus: String): SparkSession =
+    Session.build(Session.Profile.Bench, cpus.toInt)
 
   /** Ambient load (1m, 5m) from /proc/loadavg; empty on non-Linux or any
     * read failure — best-effort context, never a reason to fail a bench. */
@@ -48,37 +23,6 @@ object Bench {
       try src.mkString.split("\\s+").take(2).toSeq.map(_.toDouble)
       finally src.close()
     } catch { case _: Exception => Seq.empty }
-
-  /** (total, idle+iowait, steal) jiffies from /proc/stat's aggregate cpu
-    * line; (-1,-1,-1) on non-Linux or read failure. */
-  private def procStat(): (Long, Long, Long) =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      val v =
-        try src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        finally src.close()
-      (v.sum, v(3) + v(4), v(7))
-    } catch { case _: Exception => (-1L, -1L, -1L) }
-
-  /** Hypervisor steal as a percentage of the NON-IDLE cpu time spanned by
-    * `body` — the cut the hypervisor took of the cycles this guest's busy
-    * cores tried to spend. Direct co-tenancy evidence with a different
-    * blind spot than the spins: steal catches cpu-time confiscation,
-    * the memory walk catches bandwidth/LLC contention that steals nothing.
-    * (r15 diagnosis of the day-long degraded mode: a single busy core
-    * measured ~30-50% steal-of-busy while the host sat at loadavg 0.1,
-    * and spin_mem read 2.0-3.8 s vs ~1.0 quiet.) -1 when /proc/stat is
-    * unavailable or the interval had no busy time. */
-  private[graft] def stealPctBusy[A](body: => A): (A, Double) = {
-    val (t0, i0, s0) = procStat()
-    val a = body
-    val (t1, i1, s1) = procStat()
-    val busy = (t1 - t0) - (i1 - i0)
-    val pct =
-      if (t0 < 0 || t1 < 0 || busy <= 0) -1.0
-      else 100.0 * (s1 - s0) / busy.toDouble
-    (a, pct)
-  }
 
   /** Effective-host-speed indexes, each a fixed single-thread workload
     * timed after one unrecorded JIT-warmup pass. Two probes with disjoint
@@ -139,9 +83,9 @@ object Bench {
     * quiet and 1.47–2.2 s in every documented degraded window, so the
     * flag sits in the gap. */
   private[graft] def spinRegFlag: Double =
-    sys.env.getOrElse("SPARK_GRAFT_SPIN_REG_FLAG", "0.45").toDouble
+    Env.double("SPARK_GRAFT_SPIN_REG_FLAG", 0.45)
   private[graft] def spinMemFlag: Double =
-    sys.env.getOrElse("SPARK_GRAFT_SPIN_MEM_FLAG", "1.35").toDouble
+    Env.double("SPARK_GRAFT_SPIN_MEM_FLAG", 1.35)
 
   /** Record-gate (r14 verdict #1): an artifact-of-record cut must not
     * embed the host's degraded mode (BENCH_r14 66.6 s, BENCH_SF1 71.4 s
@@ -156,8 +100,8 @@ object Bench {
     * final (reg, mem) readings. */
   private def awaitQuiet(reg0: Double, mem0: Double): (Double, Double) = {
     if (sys.env.get("SPARK_GRAFT_RECORD").isEmpty) return (reg0, mem0)
-    val retrySec = sys.env.getOrElse("SPARK_GRAFT_RECORD_RETRY_SEC", "60").toInt
-    val tries = sys.env.getOrElse("SPARK_GRAFT_RECORD_TRIES", "20").toInt
+    val retrySec = Env.int("SPARK_GRAFT_RECORD_RETRY_SEC", 60)
+    val tries = Env.int("SPARK_GRAFT_RECORD_TRIES", 20)
     var (reg, mem) = (reg0, mem0)
     var i = 0
     while ((reg > spinRegFlag || mem > spinMemFlag) && i < tries) {
@@ -289,14 +233,7 @@ object Bench {
     // comparability) when a noisy co-tenant window would otherwise
     // dominate the deltas; the count is RECORDED in the output so an
     // artifact measured at a different N is never silently compared.
-    val passes = math.max(1, sys.env.get("SPARK_GRAFT_PASSES") match {
-      case None => 2
-      case Some(raw) => scala.util.Try(raw.trim.toInt).getOrElse(
-        // a malformed value must fail LOUDLY and name the knob — a bare
-        // .toInt aborts the whole run with an anonymous NumberFormatException
-        // before any query executes
-        sys.error(s"SPARK_GRAFT_PASSES must be an integer, got '$raw'"))
-    })
+    val passes = math.max(1, Env.int("SPARK_GRAFT_PASSES", 2))
     val allPasses = (1 to passes).map(_ => names.map(n => n -> timeOnce(n)).toMap)
     val results = names
       .map(n => n -> allPasses.map(_(n)).min)
@@ -357,8 +294,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = buildSession(cpus)
+    val spark = Session.build(Session.Profile.Bench, Session.cpus())
     val out0 = run(spark, sfDir)
     println(out0.stdoutLine)
     // Persist the COMPLETE result to a stable repo path in addition to

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time one named query (warm, N passes) — the per-query view of
   * Bench for iterating on a single plan without re-running the full set.
   * Usage: BenchOne <queryName> [sfDir] [passes]
@@ -20,24 +18,9 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 3
-    // mirror Bench's session config (same env knobs) so per-query numbers
-    // iterated on here reproduce in the full bench
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep the NANOS→Long branch of Tables.normalizeEventTs reachable
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Bench's session, so per-query numbers iterated on here reproduce in
+    // the full bench
+    val spark = Session.build(Session.Profile.Bench, Session.cpus())
 
     final case class StageRow(id: Int, nm: String, wallMs: Long,
                               taskMs: Long, maxTaskMs: Long, nTasks: Int,

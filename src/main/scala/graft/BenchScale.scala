@@ -23,7 +23,7 @@ object BenchScale {
     if (!new java.io.File(s"$scaled/documents.parquet").exists()) {
       ScaleUp.main(Array(base, scaled, factor.toString))
     }
-    val spark = Bench.buildSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Session.build(Session.Profile.Bench, Session.cpus())
     val out = Bench.run(spark, scaled)
     println(out.stdoutLine)
     // record-gate aware: under SPARK_GRAFT_RECORD=1 a probe-flagged run is

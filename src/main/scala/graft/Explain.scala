@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan of each named
   * query (default: the bench set) so pushdown/broadcast/codegen can be
   * audited. `scripts/run_verify.sh <sfDir> unused graft.Explain`
@@ -15,16 +13,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.benchNames
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep the NANOS→Long branch of Tables.normalizeEventTs reachable
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(Session.Profile.Check, Session.cpus())
     names.foreach { n =>
       println(s"\n===================== $n =====================")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -32,27 +32,7 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
 
-  /** Operators whose perf must be regression-visible even though their Q
-    * definitions predate the bench flag: the round-4 additions
-    * (incremental state, scale toolkit, PQ/ANN, native as-of). Kept here
-    * so the bench set is the flag union — PERF.md records why the
-    * remaining gate-only queries stay excluded. */
-  private val alsoBench: Seq[String] = Seq(
-    "q43_incremental_rollup", "q44_zorder_key", "q45_sketch_merge",
-    "q46_scd2_merge", "q47_incremental_quantile", "q49_global_rownum",
-    "q50_ols_trend", "q51_key_skew", "q52_dist_drift", "q53_pagerank",
-    "s08_pq_encode", "s09_pq_adc", "s10_hard_negatives",
-    "e06_asof_native", "e07_asof_pushdown", "e09_attribution_outer",
-    // round 9: the SemDeDup k∝n scale form rides every standing surface
-    // so the "linear at sf10" claim is re-measured each round, not once
-    "s12_semdedup_scaled",
-    // round 12: the multimodal family joins the bench so v-regressions
-    // surface in BENCH_r{N} and the DuckDB pairing, not only in ad-hoc
-    // PERF.md decade probes (the round-11 process gap)
-    "v01_media_bytestats", "v02_frame_sample", "v03_image_ahash",
-    "v04_image_neardup", "v05_audio_fingerprint", "v06_video_neardup")
-
   /** Headline subset for the sf0.1 bench. */
   def benchNames: Seq[String] =
-    (registry.filter(_.bench).map(_.name) ++ alsoBench).distinct
+    registry.filter(_.bench).map(_.name)
 }

@@ -41,7 +41,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Bench.buildSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Session.build(Session.Profile.Bench, Session.cpus())
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- decontamination at ingest ----

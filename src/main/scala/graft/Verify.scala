@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,17 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing args: run only these query names (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep the NANOS→Long branch of Tables.normalizeEventTs reachable
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.Profile.Check, Session.cpus())
     // loud (non-fatal) schema-drift diagnosis before anything runs
     graft.core.Contract.warn(spark, sfDir)
     new java.io.File(outDir).mkdirs()

@@ -104,7 +104,7 @@ object FrameIndex {
     * AFTER build is invisible to the frozen whitelist, so pairs among
     * post-build arrivals sharing only such frames are silently missed
     * (recall decays as the corpus outgrows the build half — measured in
-    * PERF.md round 12 via graft.DriftProbe), and a build-time under-cap
+    * PERF.md "Round 12 delta"), and a build-time under-cap
     * frame the corpus has since made boilerplate keeps generating
     * candidates. The refresh restores from-scratch dictionary semantics
     * at every compaction, bounding drift by the compaction cadence. It

@@ -522,31 +522,21 @@ object Graph {
   }
 
   /** Canonical co-occurrence edges: ids sharing a group value become an
-    * edge (a < b, distinct) — the build feeding q56/GraphProbe's
-    * co-purchase graph. ONE exchange on the group key, a Tungsten
+    * edge (a < b, distinct) — the build feeding q56's co-purchase
+    * graph. ONE exchange on the group key, a Tungsten
     * sortWithinPartitions, then a streaming run iterator that emits each
     * group's pairs with ZERO per-group allocation (one reused buffer per
     * partition; sorted runs make pairs canonical and dedup consecutive
     * ids for free) — then the edge distinct.
     *
-    * Why this form (round-14 A/B ladder, all same-window, GraphProbe
-    * `edges_*` forms on the full sf10 graph / sf100d): the round-13
-    * self-join baseline pays a distinct exchange PLUS a group re-shuffle
-    * and two SMJ sorts (warm 9.7–11.7 s sf10); collect_set + the
-    * compiled UnorderedPairs kernel takes the one-exchange shape (8.6 —
-    * 9.1 s sf10, 35 s whole-query sf100d) but its ObjectHashAggregate
-    * always falls to SORT-BASED mode here (>128 groups/partition;
-    * hash mode OOMs outright at 8 g) and its per-group object churn
-    * degrades ~1.4× inside a worked JVM (in-suite 16.4 s vs the
-    * self-join's 12.5 s same-day — long-lived executors are the
-    * production case, so that loss matters); forcing SHJ on the
-    * self-join (17–19 s) and a colocated repartition+dedup join
-    * (16.5 s) both lose to everything. The sorted-run form keeps the
-    * one-exchange plan and replaces the object agg with the sort the
-    * fallback was doing anyway, minus the 6.7 M transient set buffers:
-    * same-window it beats the kernel form by ~15% at sf10 (9.8–11.3 vs
-    * 11.6–13.0) and ~31% at sf100d full graph (78.9 vs 114 s).
-    * `mapPartitions` is deliberate here — the run iteration over a
+    * Why this form (the five-way A/B ladder is in PERF.md "Round 14
+    * delta"): the self-join pays a distinct exchange PLUS a group
+    * re-shuffle and two sorts; collect_set + the compiled UnorderedPairs
+    * kernel has the one-exchange shape, but its object aggregate always
+    * falls to sort-based mode here and its per-group set buffers churn a
+    * long-lived JVM. The sorted-run form keeps the one exchange and does
+    * the sort that fallback did anyway, minus the buffers, and won at
+    * sf10 and sf100d. `mapPartitions` is deliberate here — the run iteration over a
     * sorted partition has no Expression-shaped equivalent, and the
     * tuple encoder's churn measured cheaper than every agg/join form.
     *

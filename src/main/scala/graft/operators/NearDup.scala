@@ -552,7 +552,7 @@ object NearDup {
     * Env-overridable (measurement knob, same pattern as the bench's spin
     * flags); 0 disables the gate entirely (the pre-r16 always-lazy form). */
   private def sigCkptCap: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SIG_CKPT_CAP", "200000").toLong
+    graft.core.Env.long("SPARK_GRAFT_SIG_CKPT_CAP", 200000L)
 
   /** Chunk-level (sub-document) dedup — the RefinedWeb/CCNet-style pass
     * that removes repeated passages ACROSS documents while keeping the host

@@ -151,11 +151,12 @@ object SemDedup {
     // EXCHANGE must not stack big tiles: with the session default (~one
     // partition per core) the tile keys hash into ~cores bins, and
     // balls-into-bins stacks several tiles in the worst bin — measured
-    // round 12 (SkewProbe, 181 tiles into 32 partitions: 1972 s of task
-    // time at 176 s wall, 11 effective cores of 32; round 11's 17.6/32
-    // pin was the same mechanism, and a 396-tile grid into 32 bins ran
-    // 3× the task TIME of the spread shape — stacked build tables blow
-    // the probe loop out of cache on top of the wall-clock imbalance).
+    // round 12 (PERF.md "Round 12 delta": 181 tiles into 32 partitions,
+    // 1972 s of task time at 176 s wall, 11 effective cores of 32; round
+    // 11's 17.6/32 pin was the same mechanism, and a 396-tile grid into
+    // 32 bins ran 3× the task TIME of the spread shape — stacked build
+    // tables blow the probe loop out of cache on top of the wall-clock
+    // imbalance).
     // Whenever a big blocked grid is in play (`tiles` — callers gate it
     // on measured pair work), both sides are explicitly repartitioned on
     // the tile key into 4×tiles partitions — mostly one tile per

@@ -159,7 +159,7 @@ object EventQueries {
         SELECT p.user_id, p_event_id, p_ts, p_value, c_event_id, c_ts,
           date_diff('second', c_ts, p_ts) AS gap_sec
         FROM p ASOF LEFT JOIN c
-          ON p.user_id = c.user_id AND p.p_ts >= c.c_ts""")),
+          ON p.user_id = c.user_id AND p.p_ts >= c.c_ts"""), bench = true),
 
     // ---- the SAME as-of semantics a THIRD way: broadcast form. The click
     // history packs into one time-sorted array per user, broadcasts, and
@@ -282,7 +282,7 @@ object EventQueries {
         SELECT p.user_id, p_event_id, p_ts, c_ts
         FROM p ASOF LEFT JOIN c
           ON p.user_id = c.user_id AND p.p_ts >= c.c_ts
-        WHERE p.user_id < 75 AND p.p_value > 100""")),
+        WHERE p.user_id < 75 AND p.p_value > 100"""), bench = true),
 
     // ---- sessionization: 30-min-gap sessions via gaps-and-islands (the batch
     // equivalent of session_window / flatMapGroupsWithState) ----
@@ -352,7 +352,7 @@ object EventQueries {
           AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)
           AND CAST(c.ts AS TIMESTAMP)
               >= CAST(p.ts AS TIMESTAMP) - INTERVAL 30 MINUTE
-        WHERE p.event_type = 'purchase'""")),
+        WHERE p.event_type = 'purchase'"""), bench = true),
 
     // ---- cohort retention triangle: users grouped by FIRST-activity week
     // (their cohort), counted in every subsequent week they return — the

@@ -160,6 +160,6 @@ object ModelQueries {
         SELECT priority, n, n*sxy - sx*sy AS num, n*sxx - sx*sx AS den,
           CAST(n*sxy - sx*sy AS DOUBLE) / (n*sxx - sx*sx)
             AS slope_cents_per_month
-        FROM m"""))
+        FROM m"""), bench = true)
   )
 }

@@ -70,7 +70,7 @@ object MultimodalQueries {
           CAST(s.n // 65536 + 1 AS BIGINT) AS frames_sampled
         FROM src s
         JOIN sig g USING (doc_id)
-        LEFT JOIN agg a USING (doc_id)""")),
+        LEFT JOIN agg a USING (doc_id)"""), bench = true),
 
     // ---- video-style FRAME SAMPLING on the hash gate: payloads are
     // segmented into fixed 32-byte frames and every 4th frame is sampled —
@@ -115,7 +115,7 @@ object MultimodalQueries {
           CAST(least(32, n - frame_idx * 32) AS BIGINT) AS flen,
           md5(substr(hx, CAST(frame_idx * 64 + 1 AS INTEGER),
             CAST(least(32, n - frame_idx * 32) * 2 AS INTEGER))) AS frame_fp
-        FROM f""")),
+        FROM f"""), bench = true),
 
     // ---- image aHash on the hash gate (round-9 verdict ask #4): payloads
     // are 8×8 PRE-DECODED grayscale pixels (the thumbnailsRaw ingest seam —
@@ -130,7 +130,7 @@ object MultimodalQueries {
       (s, dir) => ahashBands(s, dir)
         .select(col("media_id"), col("band"), col("bv")),
       Some(s"""WITH $ahashBandsSql
-        SELECT doc_id AS media_id, band, bv FROM bands""")),
+        SELECT doc_id AS media_id, band, bv FROM bands"""), bench = true),
 
     // ---- the image near-dup pairs themselves: candidates share at least
     // one full 16-bit band of the aHash (LSH banding — never all-pairs),
@@ -182,7 +182,7 @@ object MultimodalQueries {
           JOIN bands ba ON ba.doc_id = c.a_id
           JOIN bands bb ON bb.doc_id = c.b_id AND bb.band = ba.band
           GROUP BY 1, 2)
-        SELECT a_id, b_id, hamming FROM ham WHERE hamming <= 6""")),
+        SELECT a_id, b_id, hamming FROM ham WHERE hamming <= 6"""), bench = true),
 
     // ---- audio fingerprint on the hash gate (the last spec-only
     // multimodal leg): payloads are REAL PCM16 WAV files — a constant
@@ -237,7 +237,7 @@ object MultimodalQueries {
           FROM bits GROUP BY 1, 2)
         SELECT doc_id AS media_id, band, bv,
           CAST(130 AS BIGINT) AS n_samples, 1 AS decoded
-        FROM bands""")),
+        FROM bands"""), bench = true),
 
     // ---- video near-dup pairs (closes the multimodal family): chain
     // v02's frame sampling → per-frame fingerprints → cross-video pairs,
@@ -312,7 +312,7 @@ object MultimodalQueries {
         JOIN sizes sa ON sa.media_id = c.a_id
         JOIN sizes sb ON sb.media_id = c.b_id
         WHERE CAST(c.shared AS DOUBLE)/CAST(sa.nf + sb.nf - c.shared AS DOUBLE)
-          >= 0.5"""))
+          >= 0.5"""), bench = true)
   )
 
   /** Canonical 44-byte PCM WAV header for exactly 260 data bytes, as hex:

@@ -19,7 +19,9 @@ final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    /** queries cheap enough + representative enough for the sf0.1 bench */
+    /** in the bench set ([[graft.SparkEntry.benchNames]]): cheap enough +
+      * representative enough for the sf0.1 bench; PERF.md records why the
+      * gate-only queries stay out */
     bench: Boolean = false)
 
 object Q {

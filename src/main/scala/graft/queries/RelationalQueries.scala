@@ -20,8 +20,8 @@ import Q._
 object RelationalQueries {
 
   /** q25's shape over arbitrary (lineitem, orders) frames — shared with
-    * [[graft.BucketProbe]], which re-times it over bucketed tables; ONE
-    * definition so the probe can never drift from the gated query. */
+    * q58, which re-runs it over bucketed tables; ONE definition so the
+    * two can never drift apart. */
   def q25Shape(li: org.apache.spark.sql.DataFrame,
                os: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     li.join(os, col("l_orderkey") === col("o_orderkey"))
@@ -678,7 +678,7 @@ object RelationalQueries {
               AS BIGINT) AS hv
           FROM lineitem),
         r AS (SELECT hv, row_number() OVER (ORDER BY hv) AS rn FROM h)
-        SELECT CAST(rn AS BIGINT) AS rn, hv FROM r WHERE rn <= 64""")),
+        SELECT CAST(rn AS BIGINT) AS rn, hv FROM r WHERE rn <= 64"""), bench = true),
 
     // ---- KMV sketch SET ALGEBRA (Beyer et al. 2007): estimate the size of
     // an INTERSECTION of two audiences from their bottom-k sketches alone —
@@ -1076,7 +1076,7 @@ object RelationalQueries {
                  - CAST(sum(c) AS DOUBLE)*CAST(sum(c) AS DOUBLE)
                    /CAST(count(*) AS DOUBLE))
                 /CAST(count(*) AS DOUBLE) + 0.5) AS BIGINT)/10000.0 AS var_amt
-        FROM c GROUP BY 1, 2""")),
+        FROM c GROUP BY 1, 2"""), bench = true),
 
     // ---- Z-order (Morton) layout key (operators/Scale.zorderKey): the
     // bit-interleave that makes multi-dimensional data skipping work —
@@ -1101,7 +1101,7 @@ object RelationalQueries {
             l_partkey % 1024 AS x, l_suppkey % 1024 AS y FROM lineitem)
           SELECT l_orderkey, l_linenumber, x, y, CAST($terms AS BIGINT) AS zkey
           FROM d"""
-      }),
+      }, bench = true),
 
     // ---- SCD type-2 merge (operators/Scd): a second dimension snapshot
     // folds into the version history — changed keys close + reopen,
@@ -1144,7 +1144,7 @@ object RelationalQueries {
         FROM base WHERE k % 23 = 0
         UNION ALL
         SELECT k, name, bal, TIMESTAMP '2024-01-01 00:00:00', NULL, TRUE
-        FROM base WHERE k % 10 <> 0 AND k % 17 <> 0""")),
+        FROM base WHERE k % 10 <> 0 AND k % 17 <> 0"""), bench = true),
 
     // ---- incremental quantiles: q35's histogram sketch maintained as
     // MERGEABLE (group, bucket, n) state — two per-slice states (odd/even
@@ -1187,7 +1187,7 @@ object RelationalQueries {
             THEN bucket END)+1)*10000 AS p95_upper_cents,
           (min(CASE WHEN cum >= ceil(CAST(0.99 AS DOUBLE)*total)
             THEN bucket END)+1)*10000 AS p99_upper_cents
-        FROM c GROUP BY 1""")),
+        FROM c GROUP BY 1"""), bench = true),
 
     // ---- bloom-filter semi-join reduction (operators/Scale.bloomPrune):
     // the runtime-filter pattern made explicit. The dim side (urgent
@@ -1240,7 +1240,7 @@ object RelationalQueries {
       },
       Some("""SELECT l_orderkey, l_linenumber, l_quantity,
         row_number() OVER (ORDER BY l_orderkey, l_linenumber) AS rid
-        FROM lineitem"""))
+        FROM lineitem"""), bench = true)
 ,
     // ---- join-key skew diagnosis (operators/Profile.keySkew): the
     // pre-flight that decides whether a fact join needs Scale.saltedJoin,
@@ -1257,7 +1257,7 @@ object RelationalQueries {
         SELECT key, cnt, cnt * 1000000 // total AS share_ppm,
           (cnt * 32 + total - 1) // total AS rec_salt
         FROM c CROSS JOIN t
-        ORDER BY cnt DESC, key LIMIT 10""")),
+        ORDER BY cnt DESC, key LIMIT 10"""), bench = true),
 
     // ---- snapshot distribution drift (operators/Profile.distributionDrift):
     // the ingest QA gate between two corpus drops — per-language ppm shares
@@ -1283,7 +1283,7 @@ object RelationalQueries {
         SELECT key, coalesce(share_a_ppm, 0) AS share_a_ppm,
           coalesce(share_b_ppm, 0) AS share_b_ppm,
           abs(coalesce(share_a_ppm, 0) - coalesce(share_b_ppm, 0)) AS drift_ppm
-        FROM sa FULL OUTER JOIN sb USING (key)""")),
+        FROM sa FULL OUTER JOIN sb USING (key)"""), bench = true),
 
     // ---- link-graph quality seeding (operators/Graph.pageRankQ): CCNet's
     // centrality-seeded quality idea on the customer↔supplier trade graph
@@ -1336,7 +1336,7 @@ object RelationalQueries {
           p0 AS (SELECT node, CAST(1000000 AS BIGINT) AS pr FROM n),
           ${iter(1)}, ${iter(2)}, ${iter(3)}
           SELECT node, pr FROM p3"""
-      }),
+      }, bench = true),
 
     // ---- array-typed predicates: the Postgres `'光電' = ALL(arr)` family
     // (reference: jobs/staging_cal.py:336-337) on an ArrayType column.
@@ -1381,18 +1381,12 @@ object RelationalQueries {
     // 1.2M edges over 20k parts, mean degree 120 — measured round 13 at
     // engine 6.6–7.9 s vs DuckDB 7.8–8.4 s same-window, a win, but it
     // would still multiply the bench total on both sides; PERF.md
-    // records the head-to-head, graft.GraphProbe re-measures it). ----
+    // "Round 13 delta" records the head-to-head). ----
     Q("q56_triangle_count",
       (s, dir) => {
         // Edge build: Graph.coOccurrenceEdges — one exchange on o,
-        // Tungsten sort, streaming run-pair emission. Chosen over the
-        // round-13 self-join form AND the collect_set + compiled-kernel
-        // form by the round-14 five-way A/B ladder (same-window
-        // GraphProbe edges_* runs; full measurements pinned in the
-        // coOccurrenceEdges scaladoc — the kernel form won standalone
-        // but its object sort-agg churn lost in-suite, the sorted-run
-        // form wins everywhere incl. 31% at sf100d). Same canonical
-        // edge set, hash-identical result.
+        // Tungsten sort, streaming run-pair emission (its scaladoc says
+        // why that form). Same canonical edge set, hash-identical result.
         // r16: entered via coOccurrenceTriangleCounts, which adds a local
         // rung BELOW the edge build — under the item cap the pair
         // emission + dedup + counting run in-process off one collect,
@@ -1464,9 +1458,9 @@ object RelationalQueries {
 
     // ---- the fact-fact co-location lever as a STANDING gate (round-9
     // verdict ask #3): q25's exact shape re-run over Scale.writeBucketed
-    // tables. BucketProbe proved the lever once at 1000× (join 19.0 s vs
-    // 70.7 s raw, same window); this row re-proves it on EVERY surface,
-    // every round — the runner asserts AT RUNTIME that the bucket-co-
+    // tables. A 1000× probe proved the lever once (join 19.0 s vs 70.7 s
+    // raw, same window; PERF.md "Round 9 delta"); this row re-proves it
+    // on EVERY surface, every round — the runner asserts AT RUNTIME that the bucket-co-
     // located join subplan is exchange-free (a silent bucketing
     // regression fails the gate loudly, not just a spec), and the hash
     // gate proves the bucketed plan returns byte-identical aggregates to

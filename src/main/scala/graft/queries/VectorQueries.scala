@@ -110,8 +110,7 @@ object VectorQueries {
     * back 40–55%" was measured under the STACKED exchange and is
     * superseded — stacking, not tile size, was the regressor. */
   private def tileTarget: Int =
-    sys.env.get("SPARK_GRAFT_SEMDEDUP_TILES")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(256)
+    graft.core.Env.int("SPARK_GRAFT_SEMDEDUP_TILES", 256)
 
   private def cosine(dot: Column, n2a: Column, n2b: Column): Column =
     dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
@@ -212,7 +211,7 @@ object VectorQueries {
     // 100 TB the candidate side is IVF-pruned to the anchor's neighboring
     // clusters first (s05), then label-filtered. ----
     Q("s10_hard_negatives", (s, dir) => knn(s, dir, labelMode = "diff", k = 5),
-      Some(sqlKnn(labelMode = "diff", k = 5))),
+      Some(sqlKnn(labelMode = "diff", k = 5)), bench = true),
 
     // ---- embedding-cosine near-duplicate pairs, blocked by cluster label:
     // the all-pairs comparison is confined to same-label blocks (an equi-join
@@ -524,7 +523,7 @@ object VectorQueries {
         best AS (SELECT vec_id, s, code,
             row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, code) AS rn
           FROM pairs)
-        SELECT vec_id, s, code FROM best WHERE rn = 1""")),
+        SELECT vec_id, s, code FROM best WHERE rn = 1"""), bench = true),
 
     // ---- PQ asymmetric-distance scan (operators/Pq.adcScores) on the hash
     // gate: the query vector (vec_id 0, fetched driver-side — the "query
@@ -570,7 +569,7 @@ object VectorQueries {
         SELECT b.vec_id, CAST(sum(lut.dist) AS BIGINT) AS adc_dist
         FROM (SELECT vec_id, s, code FROM best WHERE rn = 1) b
         JOIN lut USING (s, code)
-        GROUP BY 1""")),
+        GROUP BY 1"""), bench = true),
 
     // ---- SemDeDup (Abbas et al. 2023): semantic dedup over embeddings —
     // k-means clusters bound the pairwise work (the SemDeDup design
@@ -613,7 +612,7 @@ object VectorQueries {
       },
       Some(semDedupUnrolledSql(trainPred = None,
         kSql = "SELECT greatest(8, CAST(floor(count(*)/2500.0) AS BIGINT))" +
-          " FROM embeddings"))),
+          " FROM embeddings")), bench = true),
 
     // ---- SemDeDup under FROZEN centroids — the incremental-ingest shape:
     // centroids are trained on yesterday's corpus (here: the even-id half,

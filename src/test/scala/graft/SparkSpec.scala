@@ -4,17 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session across all suites (getOrCreate in a forked test
-  * JVM reuses the first). UTC + small shuffle partitions to match Verify. */
+  * JVM reuses the first): Verify's check profile on four cores. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // keep the NANOS→Long branch of Tables.normalizeEventTs reachable
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.build(Session.Profile.Check, 4)
 
   val sfSmoke = "/root/testdata/sf0.001"
 

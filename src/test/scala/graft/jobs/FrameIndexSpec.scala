@@ -120,7 +120,7 @@ class FrameIndexSpec extends SparkSpec {
   }
 
   test("compact(refreshDictionary) restores from-scratch dictionary semantics") {
-    // the measured drift (PERF.md round 12, graft.DriftProbe): frames
+    // the measured drift (PERF.md "Round 12 delta"): frames
     // first seen AFTER build are invisible to the frozen whitelist, so
     // two post-build arrivals sharing only such frames never pair. The
     // opt-in compact-time refresh must recompute the dictionary from the

@@ -362,7 +362,7 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     // sum() over zero groups is NULL: the wedge-volume agg must coalesce
     // it, not NPE, when the gate branch is forced on an empty frame
-    // (spreadGate = 0 is exactly how GraphProbe drives the branch).
+    // (spreadGate = 0 forces the branch).
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
     assert(Graph.triangleNodeCounts(empty, spreadGate = 0L,
       localEdgeThreshold = 0L).count() == 0L)

@@ -346,4 +346,31 @@ class NearDupSpec extends SparkSpec {
     assert(Set((0L, 100L), (1L, 101L)).subsetOf(got))
     assert(want.size >= 3, "paraphrased dups should also pair — weak fixture")
   }
+
+  test("selfMinHashPairs: lazy rung == checkpointed rung (r16 size ladder)") {
+    import spark.implicits._
+    // a small corpus takes the CHECKPOINTED rung by default (far under the
+    // doc-count cap); sigCheckpointCap = 0 forces the lazy signature pass
+    // on the same docs — the candidate pair sets must match
+    val rnd = new Random(29)
+    val vocab = (1 to 30).map(i => s"w$i")
+    def randDoc(len: Int): String =
+      (1 to len).map(_ => vocab(rnd.nextInt(vocab.length))).mkString(" ")
+    def swap(t: String): String = {
+      val arr = t.split(" ")
+      arr(rnd.nextInt(arr.length)) = vocab(rnd.nextInt(vocab.length))
+      arr.mkString(" ")
+    }
+    val bases = (0 until 8).map(i => (i.toLong, randDoc(20)))
+    val docs = (bases ++
+      bases.take(3).map { case (id, t) => (id + 100, t) } ++
+      bases.slice(3, 6).map { case (id, t) => (id + 200, swap(t)) } ++
+      Seq((300L, "ab"))).toDF("doc_id", "text")
+    def pairs(d: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      d.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val ckpt = pairs(NearDup.selfMinHashPairs(docs))
+    val lazyRung = pairs(NearDup.selfMinHashPairs(docs, sigCheckpointCap = 0L))
+    assert(ckpt.size >= 3, "fixture produced too few candidates — weak test")
+    assert(lazyRung == ckpt, s"rungs diverged: $lazyRung vs $ckpt")
+  }
 }
