@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Env
+import graft.core.{Env, PosixLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
 /** The one place a SparkSession is configured. Every main and the spec
@@ -36,7 +36,19 @@ object Session {
       // case the scan yields Long nanos and Tables.normalizeEventTs
       // re-dispatches instead of the scan throwing before dispatch
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.ui.enabled" -> "false")
+      "spark.ui.enabled" -> "false",
+      // Spark's default of 100 generated classes is below the warm working
+      // set of the query suites and the monthly DAG (300-800 classes), so
+      // a warm pass recompiled nearly all of its classes; a cached class
+      // costs ~29 KB of heap (PERF.md "Generated-code cache")
+      "spark.sql.codegen.cache.maxEntries" -> "512",
+      // the UI is off and nothing reads the status store: keep a short
+      // history of executions, jobs and stages, not Spark's 1000 of each
+      "spark.sql.ui.retainedExecutions" -> "10",
+      "spark.ui.retainedJobs" -> "10",
+      "spark.ui.retainedStages" -> "10",
+      // sets local file modes without forking `chmod` per file and directory
+      "spark.hadoop.fs.file.impl" -> classOf[PosixLocalFileSystem].getName)
     profile match {
       case Profile.Check =>
         common + ("spark.sql.shuffle.partitions" -> cpus.toString)

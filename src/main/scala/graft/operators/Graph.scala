@@ -317,7 +317,7 @@ object Graph {
       }
       val nodeVals: IndexedSeq[Any] =
         if (genericRows == null) {
-          val idMap = new LongIdMap(cap)
+          val idMap = new LongIdMap(2L * nRows)
           var i = 0
           while (i < nRows) {
             val s = idMap.getOrAdd(internal(i).getLong(0))
@@ -687,8 +687,8 @@ object Graph {
     // dense-int encodings: groups and nodes each map to insertion-order
     // ints, so one packed long per item row sorts runs with a primitive
     // Arrays.sort (no comparator boxing)
-    val gMap = new LongIdMap(2 * m)
-    val nodeMap = new LongIdMap(2 * m)
+    val gMap = new LongIdMap(2L * m)
+    val nodeMap = new LongIdMap(2L * m)
     val packed = new Array[Long](m)
     i = 0
     while (i < m) {
@@ -715,13 +715,12 @@ object Graph {
       rawPairs += k * (k - 1) / 2
       s = e
     }
-    if (rawPairs > pairGate) return None
+    if (rawPairs > pairGate || rawPairs > LongIdMap.MaxKeys) return None
     // emit + dedup: pair (u < v in dense order) packs into one long; the
     // map's insertion order IS the distinct edge list. The run buffer is
     // growable but reused (clear() keeps the backing array), so the loop
     // allocates nothing per group.
-    val pairMap = new LongIdMap(
-      math.min(rawPairs, (Int.MaxValue / 4).toLong).toInt)
+    val pairMap = new LongIdMap(rawPairs)
     val run = new scala.collection.mutable.ArrayBuffer[Int](64)
     s = 0
     while (s < m) {
@@ -788,7 +787,7 @@ object Graph {
       if (internal(i).isNullAt(0) || internal(i).isNullAt(1)) return None
       i += 1
     }
-    val idMap = new LongIdMap(2 * m)
+    val idMap = new LongIdMap(2L * m)
     val ea = new Array[Int](m); val eb = new Array[Int](m)
     i = 0
     while (i < m) {
@@ -983,13 +982,12 @@ object Graph {
   /** Open-addressing long→dense-int id assignment (linear probing, load
     * ≤ 0.5) for the local-path hot loop — a boxed HashMap here costs ~1 s
     * of allocation churn per million edges. `order(i)` is the key that
-    * was assigned id i. */
-  private final class LongIdMap(expectedInserts: Int) {
-    private val cap = {
-      var c = 16
-      while (c < math.max(1, expectedInserts) * 2) c <<= 1
-      c
-    }
+    * was assigned id i. It never resizes: sized for `expectedInserts`
+    * (clamped to [[LongIdMap.MaxKeys]]), it fails naming its capacity
+    * when one more key would push it past half full, instead of probing a
+    * full table forever. */
+  private[graft] final class LongIdMap(expectedInserts: Long) {
+    private val cap = LongIdMap.slots(expectedInserts)
     private val mask = cap - 1
     private val ks = new Array[Long](cap)
     private val vs = Array.fill(cap)(-1)
@@ -1002,7 +1000,11 @@ object Graph {
       var i = slot(k)
       while (true) {
         val v = vs(i)
-        if (v == -1) { ks(i) = k; vs(i) = order.size; order += k; return order.size - 1 }
+        if (v == -1) {
+          if (order.size == cap / 2) throw new IllegalStateException(
+            s"LongIdMap is full: $cap slots hold at most ${cap / 2} keys")
+          ks(i) = k; vs(i) = order.size; order += k; return order.size - 1
+        }
         if (ks(i) == k) return v
         i = (i + 1) & mask
       }
@@ -1010,14 +1012,25 @@ object Graph {
     }
   }
 
+  private[graft] object LongIdMap {
+    /** The most keys a map is sized for: 2^30 slots, the largest power of
+      * two an array holds. */
+    val MaxKeys: Long = 1L << 29
+
+    /** Table size for `expectedInserts` keys at load ≤ 0.5: a power of
+      * two, at least 16, at most 2 * [[MaxKeys]]. */
+    def slots(expectedInserts: Long): Int = {
+      val want = 2 * math.max(1L, math.min(expectedInserts, MaxKeys))
+      var c = 16
+      while (c < want) c <<= 1
+      c
+    }
+  }
+
   /** Open-addressing set of NON-NEGATIVE longs (the packed (srcId, dstId)
     * edge keys; both ids are dense ints ≥ 0). -1 marks an empty slot. */
   private final class LongOpenSet(expectedInserts: Int) {
-    private val cap = {
-      var c = 16
-      while (c < math.max(1, expectedInserts) * 2) c <<= 1
-      c
-    }
+    private val cap = LongIdMap.slots(expectedInserts)
     private val mask = cap - 1
     private val ks = Array.fill(cap)(-1L)
     private def slot(k: Long): Int = {

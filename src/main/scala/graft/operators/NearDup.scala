@@ -471,6 +471,15 @@ object NearDup {
     * shingle buckets its output is ∝ true near-dup pairs, the property
     * that makes LSH sub-quadratic at 100 TB.
     *
+    * Not a pure plan builder: while building the plan it runs one eager
+    * count job over `docs` and, at or under `sigCheckpointCap` docs, an
+    * eager `localCheckpoint` of the signature frame (the same contract as
+    * [[Graph.triangleNodeCounts]], which persists and counts its edge set
+    * up front). A local checkpoint truncates lineage: on a cluster,
+    * losing an executor's checkpoint blocks after this returns fails the
+    * job instead of recomputing them. `sigCheckpointCap = 0` skips both
+    * and returns a lazy plan with full lineage.
+    *
     * @param docs (id, text) — first two columns, any names
     * @return (a_id, b_id) distinct candidate pairs, a_id < b_id */
   def selfMinHashPairs(docs: DataFrame, shingleWords: Int = 3,

@@ -15,7 +15,12 @@ class SessionSpec extends AnyFunSuite {
     "spark.sql.extensions" -> "graft.GraftExtensions",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "512",
+    "spark.sql.ui.retainedExecutions" -> "10",
+    "spark.ui.retainedJobs" -> "10",
+    "spark.ui.retainedStages" -> "10",
+    "spark.hadoop.fs.file.impl" -> "graft.core.PosixLocalFileSystem")
 
   test("bench profile is the bench session config, key by key") {
     val want = common ++ Map(

@@ -397,4 +397,18 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == (0L to 3L).map(_ -> 3L).toMap)
   }
+
+  test("LongIdMap fails naming its capacity when full, and sizes clamp") {
+    val m = new Graph.LongIdMap(4) // 16 slots: at most 8 keys
+    (0L until 8L).foreach(k => assert(m.getOrAdd(k * 1000L) == k))
+    assert(m.getOrAdd(7000L) == 7) // a present key still resolves
+    val e = intercept[IllegalStateException](m.getOrAdd(-1L))
+    assert(e.getMessage.contains("16 slots"), e.getMessage)
+    assert(m.order.length == 8)
+    // a size past Int range clamps to 2^30 slots instead of overflowing
+    assert(Graph.LongIdMap.slots(0L) == 16)
+    assert(Graph.LongIdMap.slots(9L) == 32)
+    assert(Graph.LongIdMap.slots(2L * Int.MaxValue) == (1 << 30))
+    assert(Graph.LongIdMap.slots(Long.MaxValue) == (1 << 30))
+  }
 }
