@@ -1,16 +1,25 @@
 #!/usr/bin/env bash
 # Paired A/B of the repo benchmark between two commits: runs
-# `perfbench/run.py` alternately from a git worktree of each, seed by seed,
-# so host drift hits both sides alike, then prints each end-to-end metric's
-# median per side and the ratio change/base.
+# `perfbench/run.py` alternately from a clone of each, seed by seed, so host
+# drift hits both sides alike, then prints for each end-to-end metric the
+# median per side, the ratio change/base, the parent's interquartile range
+# as a share of its median, how many seed pairs the change won, and a
+# verdict against the metric's bound in BENCHMARK.json:
+#   ok          the change's median is no worse than the parent's by more
+#               than the bound
+#   worse       it is worse by more than the bound
+#   unresolved  the parent's own spread is wider than the bound, so a
+#               difference within it cannot be told from noise
+# A metric on which every change run beats every parent run reads ok
+# whatever the spread. Ties count as a win for neither side.
 #
 # Usage: scripts/ab_pairs.sh [-b BASE] [-c CHANGE] [-s "SEEDS"] [-w "WORKLOADS"] [-o DIR]
 #   BASE       commit of the A side (default HEAD~1)
 #   CHANGE     commit of the B side (default HEAD)
 #   SEEDS      seeds to pair (default "1 2 3 4 5")
 #   WORKLOADS  BENCHMARK.json workloads (default: all of them)
-#   DIR        where the worktrees and the per-run result lines go
-#              (default a new temporary directory); the worktrees are
+#   DIR        where the clones and the per-run result lines go
+#              (default a new temporary directory); the clones are
 #              removed on exit, the result lines are kept
 #
 # Commits are compared, not the working tree: commit (or stash) first.
@@ -25,21 +34,21 @@ while getopts "b:c:s:w:o:" opt; do
   case $opt in
     b) BASE=$OPTARG ;; c) CHANGE=$OPTARG ;; s) SEEDS=$OPTARG ;;
     w) WORKLOADS=$OPTARG ;; o) OUT=$OPTARG ;;
-    *) sed -n '2,20p' "$0"; exit 2 ;;
+    *) sed -n '2,29p' "$0"; exit 2 ;;
   esac
 done
 OUT=${OUT:-$(mktemp -d /tmp/ab_pairs.XXXX)}
 mkdir -p "$OUT"
 OUT=$(cd "$OUT" && pwd)
 
-cleanup() {
-  for side in base change; do
-    [ -d "$OUT/$side" ] && git worktree remove --force "$OUT/$side" || true
-  done
-}
+cleanup() { rm -rf "$OUT/base" "$OUT/change"; }
 trap cleanup EXIT
-git worktree add --detach "$OUT/base" "$BASE" >/dev/null
-git worktree add --detach "$OUT/change" "$CHANGE" >/dev/null
+for side in base change; do
+  [ $side = base ] && rev=$BASE || rev=$CHANGE
+  sha=$(git rev-parse --verify "$rev^{commit}")
+  git clone --quiet --shared --no-checkout . "$OUT/$side"
+  git -C "$OUT/$side" checkout --quiet --detach "$sha"
+done
 echo "base   $(git -C "$OUT/base" rev-parse --short HEAD) ($BASE)" >&2
 echo "change $(git -C "$OUT/change" rev-parse --short HEAD) ($CHANGE)" >&2
 
@@ -79,7 +88,7 @@ metrics = [(m["name"], m["better"], m["bound"]) for m in json.load(open(bench))[
 
 
 def side(w, name):
-    runs = []
+    runs = {}
     for p in sorted(glob.glob(os.path.join(results, w, f"{name}-seed*.json"))):
         try:
             r = json.load(open(p))
@@ -87,23 +96,45 @@ def side(w, name):
             print(f"unreadable result line: {p}", file=sys.stderr)
             continue
         if r.get("correct"):
-            runs.append({k: v["value"] for k, v in r["metrics"].items()})
+            seed = os.path.basename(p)[len(name) + len("-seed"):-len(".json")]
+            runs[seed] = {k: v["value"] for k, v in r["metrics"].items()}
         else:
             print(f"check failed, left out: {p}", file=sys.stderr)
     return runs
 
 
+def won(a, b, better):
+    return b < a if better == "lower" else b > a
+
+
+def verdict(a, b, better, bound, spread):
+    ma, mb = statistics.median(a), statistics.median(b)
+    if all(won(x, y, better) for x in a for y in b):
+        return "ok"
+    if spread > bound:
+        return "unresolved"
+    worse = (mb - ma if better == "lower" else ma - mb) / ma if ma else float(mb != ma)
+    return "worse" if worse > bound else "ok"
+
+
 for w in workloads:
     base, change = side(w, "base"), side(w, "change")
     print(f"{w}: {len(base)} base runs, {len(change)} change runs")
-    print(f"  {'metric':<14}{'base':>12}{'change':>12}{'ratio':>9}  better  bound")
+    print(f"  {'metric':<14}{'base':>12}{'change':>12}{'ratio':>9}{'iqr/base':>10}"
+          f"{'won':>7}  better  bound  verdict")
     for name, better, bound in metrics:
-        a = [r[name] for r in base if name in r]
-        b = [r[name] for r in change if name in r]
+        a = {s: r[name] for s, r in base.items() if name in r}
+        b = {s: r[name] for s, r in change.items() if name in r}
         if not a or not b:
             continue
-        ma, mb = statistics.median(a), statistics.median(b)
+        ma, mb = statistics.median(a.values()), statistics.median(b.values())
+        q = statistics.quantiles(a.values(), n=4) if len(a) > 1 else [ma, ma, ma]
+        spread = (q[2] - q[0]) / ma if ma else float(q[2] != q[0])
+        pairs = sorted(a.keys() & b.keys())
+        wins = sum(won(a[s], b[s], better) for s in pairs)
         ratio = f"{mb / ma:9.3f}" if ma else f"{'-':>9}"
-        print(f"  {name:<14}{ma:12.4g}{mb:12.4g}{ratio}  {better:<6}  {bound}")
+        v = verdict(list(a.values()), list(b.values()), better, bound, spread)
+        print(f"  {name:<14}{ma:12.4g}{mb:12.4g}{ratio}{spread:10.3f}"
+              f"{wins:>3}/{len(pairs):<3}  {better:<6}  {bound:<5}  {v}")
 EOF
 echo "result lines: $OUT/results" >&2

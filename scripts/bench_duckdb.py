@@ -1,7 +1,10 @@
 #!/usr/bin/env python3
 """DuckDB comparator for the bench set — the honest methodology from
 MEMORY/PERF.md: ONE warm shared connection, all table views created once,
-min-of-2 per query, same-day pairing with the engine run.
+min-of-2 per query, same-day pairing with the engine run. Each timed query
+fetches its full result as an Arrow table, the counterpart of the engine's
+write to Spark's `noop` sink (a count would let the optimizer drop every
+column it does not need).
 
 Usage: bench_duckdb.py SF_DIR ORACLE_JSON [name ...]
   SF_DIR      parquet dir (file tables like sf0.1, or dir tables from ScaleUp)
@@ -23,7 +26,7 @@ TIMEOUT = float(os.environ.get("DUCK_TIMEOUT_SEC", "0") or 0)
 
 def run_with_timeout(con, sql):
     if TIMEOUT <= 0:
-        return con.execute(sql).fetchall()
+        return con.execute(sql).fetch_arrow_table()
     done = threading.Event()
 
     def watch():
@@ -32,7 +35,7 @@ def run_with_timeout(con, sql):
     t = threading.Thread(target=watch, daemon=True)
     t.start()
     try:
-        return con.execute(sql).fetchall()
+        return con.execute(sql).fetch_arrow_table()
     finally:
         done.set()
         t.join()
@@ -62,10 +65,10 @@ def main():
             continue
         best = None
         try:
-            run_with_timeout(con, f"SELECT count(*) FROM ({sql}) q")
+            run_with_timeout(con, sql)
             for _ in range(2):
                 t0 = time.perf_counter()
-                run_with_timeout(con, f"SELECT count(*) FROM ({sql}) q")
+                run_with_timeout(con, sql)
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
             times[name] = round(best, 4)

@@ -17,8 +17,8 @@
 #                        decade for the char-gram family)
 #
 # Measurement commands the surfaces feed (run after the build):
-#   SPARK_GRAFT_SF_DIR=/tmp/sf1  scripts/run_verify.sh x x graft.Bench
-#   scripts/run_verify.sh /root/testdata/sf0.1 /tmp/sf1 graft.BenchScale 10 /root/repo/BENCH_SF1.json
+#   SPARK_GRAFT_SF_DIR=/tmp/sf1 SPARK_GRAFT_BENCH_OUT=BENCH_SF1.json \
+#     scripts/run_verify.sh x x graft.Bench
 #   scripts/run_verify.sh q25_interval_join /tmp/sf100d graft.BenchOne 2
 #   (relational 1000x probe = BenchOne over q01/q04/q05/q13/q25/q39/q48/q56/q57;
 #    SPARK_GRAFT_SHUFFLE=256 halves q25 at 1000x — see PERF.md)

@@ -2,6 +2,7 @@ package graft
 
 /** Dev tool: time one named query (warm, N passes) — the per-query view of
   * Bench for iterating on a single plan without re-running the full set.
+  * Each pass writes the full result to `noop`, as Bench does.
   * Usage: BenchOne <queryName> [sfDir] [passes]
   *
   * Opt-in diagnostics (both used for the round-10 sf10 pins):
@@ -65,9 +66,9 @@ object BenchOne {
       if (profile) spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       last = SparkEntry.queries(name)(spark, sfDir)
-      val n = last.count()
+      Bench.measure(last)
       val dt = (System.nanoTime() - t0) / 1e9
-      println(f"pass $i: $dt%.3f s  rows=$n")
+      println(f"pass $i: $dt%.3f s")
     }
     if (sys.env.contains("SPARK_GRAFT_STAGES")) {
       // the listener bus is async and the public API hides

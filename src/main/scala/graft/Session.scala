@@ -12,7 +12,7 @@ object Session {
   /** A session config; callers pick one in code, no setting selects it. */
   sealed abstract class Profile(val logLevel: String)
   object Profile {
-    /** Timed runs (Bench, BenchScale, BenchOne, StreamBench, the perfbench
+    /** Timed runs (Bench, BenchOne, StreamBench, the perfbench
       * harness): AQE with partition coalescing, shuffled-hash joins
       * preferred, a 64 MB broadcast threshold. */
     case object Bench extends Profile("ERROR")

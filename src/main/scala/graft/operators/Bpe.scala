@@ -168,18 +168,21 @@ object Bpe {
     * state is the distinct-word histogram, which at sf0.1 is a few
     * thousand rows being pushed through rounds × (explode + shuffle +
     * head + kernel-rewrite + persist) — each round pure scheduler floor.
-    * Under `localVocabThreshold` (driver-heap-derived) the histogram is
-    * collected ONCE off the same aggregate job that computes Σ cnt (the
-    * row count rides that 1-row agg, so the over-cap path pays ZERO
-    * extra work) and the merge loop runs in-process, applying the SAME
-    * compiled kernel ([[graft.functions.TextExpressions.bpeMergeApply]])
-    * per word and the same (count desc, a asc, b asc) argmax under
+    * Under `localVocabThreshold` (default
+    * [[graft.core.SizeLadder.LocalVocab]]) the histogram is collected ONCE
+    * off the same aggregate job that computes Σ cnt (the row count rides
+    * that 1-row agg, so the over-cap path pays ZERO extra work) and the
+    * merge loop runs in-process, applying the SAME compiled kernel
+    * ([[graft.functions.TextExpressions.bpeMergeApply]]) per word and the
+    * same (count desc, a asc, b asc) argmax under
     * UTF8String binary comparison — bit-identical by construction, and
     * pinned: BpeSpec's reference corpora all take this rung, a dedicated
     * spec forces the distributed rung on the same corpora and asserts
     * table equality, and the t33/t34 oracle hashes are unchanged. */
   def trainFromCounts(wordCounts: DataFrame, rounds: Int,
-      localVocabThreshold: Long = derivedLocalVocabCap()): DataFrame = {
+      localVocabThreshold: Long =
+        graft.core.SizeLadder.driverCap(graft.core.SizeLadder.LocalVocab))
+      : DataFrame = {
     val spark = wordCounts.sparkSession
     graft.functions.TextExpressions.register(spark)
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -267,22 +270,6 @@ object Bpe {
     merges.toSeq
       .toDF("round", "lhs", "rhs", "merged", "pair_count", "n_rows_after")
   }
-
-  /** Driver-heap-derived vocab cap for [[trainFromCounts]]'s local rung:
-    * the collected state is one (syms, cnt) pair per DISTINCT word —
-    * ~512 bytes budgeted per word covers the symbol string (which only
-    * shrinks under merges), the boxed row and map overhead — budgeted at
-    * a twentieth of the heap. ~780k words on 8 GiB; natural-language
-    * vocabularies reach that around corpus sizes whose per-round pair
-    * shuffle is real work, which is where the distributed loop should
-    * own the rounds anyway. */
-  def derivedLocalVocabCap(
-      heapBytes: Long = Runtime.getRuntime.maxMemory(),
-      bytesPerWord: Long = 512L,
-      heapFraction: Double = 0.05): Long =
-    math.max(1L << 12,
-      math.min((heapBytes * heapFraction).toLong / bytesPerWord,
-        (Int.MaxValue - 8).toLong))
 
   /** The in-process merge loop over a collected (syms, cnt) histogram —
     * the local rung of [[trainFromCounts]]'s size ladder. Semantics are

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.SizeLadder
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -10,57 +11,6 @@ import scala.jdk.CollectionConverters._
   * deduplication (pair edges → duplicate clusters).
   */
 object Graph {
-
-  /** Driver-heap-derived default for the size-ladder's local-path edge cap.
-    * The local rungs collect the edge set to the driver: measured cost is
-    * ~128 bytes/edge all-in (collected UnsafeRow batch + primitive
-    * edge/id/dedup tables at ≤0.5 load), and the rung may spend at most
-    * `heapFraction` of the heap — so the cap scales with the deployment
-    * (~3.3M edges on a 4 GiB driver, ~107M on 128 GiB) instead of being a
-    * constant tuned on one box. Clamped to [2^16, Int.MaxValue-8] (the
-    * ladder's floor / the JVM array ceiling). The derivation is exercised
-    * at simulated driver sizes in GraphSpec. */
-  def derivedLocalEdgeCap(
-      heapBytes: Long = Runtime.getRuntime.maxMemory(),
-      bytesPerEdge: Long = 128L,
-      heapFraction: Double = 0.10): Long =
-    math.max(1L << 16,
-      math.min((heapBytes * heapFraction).toLong / bytesPerEdge,
-        (Int.MaxValue - 8).toLong))
-
-  /** Heap-derived default for the BSP broadcast rung: a broadcast rank frame
-    * costs ~48 bytes/node (long node + long rank + row overhead) and is
-    * resident per executor JVM, so cap it at a twentieth of the heap —
-    * ~4.5M nodes on 4 GiB. The upper clamp is Spark's own 8 GiB broadcast
-    * hard limit divided by bytes/node: a cap that admits an inexecutable
-    * broadcast is not a cap. */
-  def derivedBroadcastNodeCap(
-      heapBytes: Long = Runtime.getRuntime.maxMemory(),
-      bytesPerNode: Long = 48L): Long =
-    math.max(1L << 14,
-      math.min(heapBytes / 20 / bytesPerNode, (8L << 30) / bytesPerNode))
-
-  /** Executor-aware broadcast cap: the broadcast is resident per EXECUTOR
-    * JVM, so on a cluster the binding heap is `spark.executor.memory`, not
-    * the (possibly much larger) driver's — sizing a 128 GiB driver's
-    * broadcast into 8 GiB executors is the OOM this guards. In local mode
-    * the conf is unset and the driver JVM IS the executor, so the
-    * driver-heap derivation is exactly right there. The driver still
-    * materializes the value first, hence the min with its own heap. */
-  def derivedBroadcastNodeCap(spark: org.apache.spark.sql.SparkSession): Long =
-    derivedBroadcastNodeCapFrom(
-      spark.sparkContext.getConf.getOption("spark.executor.memory"))
-
-  /** Core of the session overload, split out because spark.executor.memory
-    * is a static conf a test cannot set on a live session. */
-  private[operators] def derivedBroadcastNodeCapFrom(
-      executorMem: Option[String]): Long = {
-    val executorBytes = executorMem
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(Runtime.getRuntime.maxMemory())
-    derivedBroadcastNodeCap(
-      math.min(executorBytes, Runtime.getRuntime.maxMemory()))
-  }
 
   /** Connected components by min-label propagation with pointer jumping:
     * each round every node takes the min of its own label and its
@@ -81,38 +31,29 @@ object Graph {
     * @param edges two-column DataFrame of undirected edges
     * @param localEdgeThreshold edge count at or below which a driver-side
     *   union-find replaces the BSP loop (stats-driven strategy choice);
-    *   defaults to the heap-derived [[derivedLocalEdgeCap]]
+    *   defaults to the heap-derived [[SizeLadder.LocalEdges]] cap
     * @return (id, component) — component = min node id reachable
     */
   def connectedComponents(
       edges: DataFrame,
-      localEdgeThreshold: Long = derivedLocalEdgeCap()): DataFrame = {
+      localEdgeThreshold: Long = SizeLadder.driverCap(SizeLadder.LocalEdges))
+      : DataFrame = {
     val Array(srcCol, dstCol) = edges.columns
     val lvl = StorageLevel.MEMORY_AND_DISK
-    val e2 = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .persist(lvl)
     // size-adaptive strategy, the same stats-driven choice a broadcast join
     // makes: a near-dup edge set is usually orders of magnitude smaller
     // than the corpus, and below the threshold a driver-side union-find
     // finishes in one collect instead of log(diameter) BSP rounds each
     // paying the per-job scheduling floor. Above it, the distributed BSP
     // path below handles edge sets that never fit one machine.
-    // Same middle rung as pageRankQ: a raw set over the cap may still
-    // dedup under it (heavy-multiplicity producers), and the distinct is
-    // free either way — duplicates are semantically harmless to min-label
-    // propagation but inflate every BSP join, so the deduped frame is the
-    // better BSP input too.
-    val nRaw = e2.count()
-    val (base, n) =
-      if (nRaw <= localEdgeThreshold) (e2, nRaw)
-      else {
-        val d = e2.distinct().persist(lvl)
-        val nd = d.count()
-        e2.unpersist()
-        (d, nd)
-      }
-    if (n <= localEdgeThreshold) {
+    // Duplicates are semantically harmless to min-label propagation but
+    // inflate every BSP join, so the deduped frame of the middle rung is
+    // the better BSP input too.
+    val sized = SizeLadder.distinctRung(edges.select(
+      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")),
+      localEdgeThreshold)
+    val base = sized.frame
+    if (sized.local) {
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -205,14 +146,12 @@ object Graph {
     * @param iters BSP rounds to run
     * @return (node, pr) with pr in 1e-6 units (a rank of 1.0 = 1000000) */
   def pageRankQ(edges: DataFrame, iters: Int,
-                broadcastNodeThreshold: Long = -1L,
+                broadcastNodeThreshold: Long =
+                  SizeLadder.executorCap(SizeLadder.BroadcastNodes),
                 dedupEdges: Boolean = true,
-                localEdgeThreshold: Long = derivedLocalEdgeCap(),
+                localEdgeThreshold: Long =
+                  SizeLadder.driverCap(SizeLadder.LocalEdges),
                 undirected: Boolean = false): DataFrame = {
-    // -1 = derive from the session (executor-aware); an explicit value wins
-    val bcastNodeCap =
-      if (broadcastNodeThreshold >= 0L) broadcastNodeThreshold
-      else derivedBroadcastNodeCap(edges.sparkSession)
     val Array(srcCol, dstCol) = edges.columns
     // node ids keep their native type when src and dst agree: integer
     // keys hash and shuffle far cheaper than strings. MIXED types fall
@@ -240,9 +179,7 @@ object Graph {
     // arithmetic, so both paths are bit-equal (GraphSpec). The raw count
     // bounds the distinct count, so the threshold still caps driver
     // memory.
-    val localCap =
-      math.min(localEdgeThreshold, (Int.MaxValue - 8).toLong).toInt
-    // the size check is one fully-parallel count over a persisted edge
+    // The size check is one fully-parallel count over a persisted edge
     // frame; under the cap, the collect replays the CACHE, not the
     // upstream plan — so an expensive edge build runs exactly once with
     // no caller-side persist needed. (A limit-probe would fold the check
@@ -250,29 +187,11 @@ object Graph {
     // its partition waves SEQUENTIALLY — measured slower than two
     // parallel passes on a 32-core edge build.) The BSP path below also
     // reads e0 through this cache and releases it once its own |E| cache
-    // is materialized.
-    val e0p = e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val nE = e0p.count()
-    // Middle rung of the size ladder: the RAW edge set can blow the cap
-    // while the DISTINCT pair set still fits (heavy-multiplicity graphs —
-    // e.g. a fact-table edge build emits one row per transaction). The
-    // distinct shuffle is never wasted: if the deduped set is still too
-    // big, the BSP path below needed exactly this frame anyway (directed
-    // case) or its explode input (undirected). Ladder: raw-fit → collect
-    // raw, shuffle-free; distinct-fit → ONE dedup shuffle + collect;
-    // neither → BSP. At 100 TB neither fits and nothing changes.
-    val eDistinct: Option[(DataFrame, Long)] =
-      if (nE > localCap && dedupEdges) {
-        val d = e0p.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-        val n = d.count()
-        e0p.unpersist() // raw cache is dead on every remaining path
-        Some((d, n))
-      } else None
-    val localFrame: Option[DataFrame] =
-      if (nE <= localCap) Some(e0p)
-      else eDistinct.filter(_._2 <= localCap).map(_._1)
-    if (localFrame.isDefined) {
-      val lf = localFrame.get
+    // is materialized. A deduped middle-rung frame is the directed BSP
+    // input as it stands, and the undirected one's explode input.
+    val sized = SizeLadder.distinctRung(e0, localEdgeThreshold, dedupEdges)
+    if (sized.local) {
+      val lf = sized.frame
       // integral keys take a fully-primitive path: executeCollect hands
       // back UnsafeRows read in place (no Row conversion), node ids
       // encode through an open-addressing long→int table, and dedup goes
@@ -378,15 +297,14 @@ object Graph {
     // (directly for the directed case — no second distinct; as the explode
     // input for undirected, where (a,b)/(b,a) twins still need the
     // post-explode distinct).
-    val eBase = eDistinct.map(_._1).getOrElse(e0p)
     val eDir =
-      if (!undirected) eBase
-      else eBase.select(explode(array(
+      if (!undirected) sized.frame
+      else sized.frame.select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("g"))
         .select(col("g.src").as("src"), col("g.dst").as("dst"))
     val e =
-      if (eDistinct.isDefined && !undirected) eDir // persisted + distinct already
+      if (sized.distinct && !undirected) eDir // persisted + distinct already
       else (if (dedupEdges) eDir.distinct() else eDir)
         .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = e.groupBy(col("src").as("node"))
@@ -406,13 +324,9 @@ object Graph {
     // threshold (web-scale |V|) every join stays a shuffle join.
     val nV = nodes.count()
     // nodes.count materialized the |E| cache of `e` (it derives from it);
-    // the probe caches are no longer needed. unpersist is idempotent, so
-    // the middle-rung case (e0p already released, eDistinct feeding `e`
-    // directly or through the explode) needs no special-casing beyond
-    // not releasing `e` itself.
-    e0p.unpersist()
-    eDistinct.foreach { case (d, _) => if (d ne e) d.unpersist() }
-    val small = nV <= bcastNodeCap
+    // the probe cache is no longer needed unless it is `e` itself
+    if (sized.frame ne e) sized.frame.unpersist()
+    val small = nV <= broadcastNodeThreshold
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     var pr = nodes.withColumn("pr", lit(1000000L))
     for (i <- 1 to iters) {
@@ -458,7 +372,7 @@ object Graph {
     *
     * Size ladder (r15, the connectedComponents precedent): long-keyed
     * edge sets under the driver-heap-derived `localEdgeThreshold`
-    * (default [[derivedLocalEdgeCap]]) are collected and counted by the
+    * (default [[SizeLadder.LocalEdges]]) are collected and counted by the
     * primitive [[localTriangleCounts]] kernel — the distributed plan's
     * ~25 stages are pure scheduler floor at that size (q56's sampled
     * sf0.1 graph: 4.2 s distributed vs sub-second local, same hash).
@@ -470,17 +384,14 @@ object Graph {
     *   column, distinct
     * @return (node, n_tri) for nodes in ≥ 1 triangle */
   def triangleNodeCounts(edges: DataFrame,
-                         broadcastEdgeThreshold: Long = -1L,
-                         broadcastNodeThreshold: Long = -1L,
+                         broadcastEdgeThreshold: Long =
+                           SizeLadder.executorCap(SizeLadder.BroadcastEdges),
+                         broadcastNodeThreshold: Long =
+                           SizeLadder.executorCap(SizeLadder.BroadcastNodes),
                          spreadGate: Long = wedgeSpreadGate,
-                         localEdgeThreshold: Long = -1L): DataFrame = {
-    val spark = edges.sparkSession
-    val bcastEdgeCap =
-      if (broadcastEdgeThreshold >= 0L) broadcastEdgeThreshold
-      else derivedBroadcastEdgeCap(spark)
-    val localCap =
-      if (localEdgeThreshold >= 0L) localEdgeThreshold
-      else derivedLocalEdgeCap()
+                         localEdgeThreshold: Long =
+                           SizeLadder.driverCap(SizeLadder.LocalEdges))
+      : DataFrame = {
     val Array(ac, bc) = edges.columns.take(2)
     // Materialize the canonical edge set ONCE: it feeds THREE consumers
     // (degree counting, orientation, the closing-edge probe), and a lazy
@@ -506,14 +417,14 @@ object Graph {
     // under-cap-but-dense graph.
     val longKeys = e.schema.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (longKeys && nE <= localCap) {
+    if (longKeys && nE <= localEdgeThreshold) {
       localTriangleCounts(e) match {
         case Some(out) => e.unpersist(); return out
         case None => () // null keys or wedge-work gate: distributed path
       }
     }
     val (counts, caches) =
-      triangleCountsFrame(e, nE, bcastEdgeCap, broadcastNodeThreshold,
+      triangleCountsFrame(e, nE, broadcastEdgeThreshold, broadcastNodeThreshold,
         spreadGate)
     // materialize (|V|-bounded) before releasing the caches it reads from
     val out = counts.localCheckpoint(true)
@@ -619,14 +530,13 @@ object Graph {
     * wedge the driver on a hot group — same exposure the distributed
     * form documents); [[localWedgeWorkGate]] inside the counting core. */
   def coOccurrenceTriangleCounts(items: DataFrame, group: String, id: String,
-      localItemThreshold: Long = localCoOccurrenceItemCap(),
-      localPairGate: Long = -1L): DataFrame = {
+      localItemThreshold: Long = SizeLadder.driverCap(SizeLadder.LocalItems),
+      localPairGate: Long = SizeLadder.driverCap(SizeLadder.LocalEdges))
+      : DataFrame = {
     val itemsL = items.select(col(group).cast("long").as("g"),
       col(id).cast("long").as("i"))
-    val pairGate =
-      if (localPairGate >= 0L) localPairGate else derivedLocalEdgeCap()
     val capI = math.max(0L,
-      math.min(localItemThreshold, (Int.MaxValue - 8).toLong)).toInt
+      math.min(localItemThreshold, SizeLadder.ArrayCeiling)).toInt
     // Size check and fetch in ONE bounded probe: executeTake(cap + 1)
     // stops growing its partition waves the moment it holds cap + 1 rows,
     // so over the cap it reads a cap-bounded PREFIX of the scan (a full
@@ -640,7 +550,7 @@ object Graph {
     if (capI > 0) {
       val taken = itemsL.queryExecution.executedPlan.executeTake(capI + 1)
       if (taken.length <= capI) {
-        localCoOccurrenceTriangles(itemsL.sparkSession, taken, pairGate) match {
+        localCoOccurrenceTriangles(itemsL.sparkSession, taken, localPairGate) match {
           case Some(out) => return out
           case None => () // nulls or a gate trip: distributed path below
         }
@@ -648,21 +558,6 @@ object Graph {
     }
     triangleNodeCounts(coOccurrenceEdges(itemsL, "g", "i"))
   }
-
-  /** Item cap for [[coOccurrenceTriangleCounts]]'s local rung. Unlike the
-    * edge-collect rungs, driver HEAP is not the binding constraint here:
-    * the local path's cost is a single-threaded linear collect + sort
-    * while the distributed build it replaces parallelizes across the
-    * cluster, so past a point the floor saving cannot repay the serial
-    * work. Measured crossover (r16 paired A/B, same window both sides):
-    * 200k items — local 0.98 s vs distributed 1.64 s; 2M items — local
-    * 3.21 s vs distributed 2.88 s. 1M sits under the measured crossover;
-    * the heap-derived edge cap stays as the second bound for small-heap
-    * drivers. (On a real cluster the per-job floor is HIGHER than local
-    * mode's, which moves the crossover up, never down — the default is
-    * conservative there.) */
-  private[graft] def localCoOccurrenceItemCap(): Long =
-    math.min(1L << 20, derivedLocalEdgeCap())
 
   /** In-process twin of [[coOccurrenceEdges]] + the local triangle rung
     * over already-collected (group, id) rows: sort packed (dense-group,
@@ -885,7 +780,8 @@ object Graph {
   private[graft] val localWedgeWorkGate = 2000000000L
 
   private[graft] def triangleCountsFrame(e: DataFrame, nE: Long,
-      bcastEdgeCap: Long, broadcastNodeThreshold: Long = -1L,
+      bcastEdgeCap: Long,
+      nodeCap: Long = SizeLadder.executorCap(SizeLadder.BroadcastNodes),
       spreadGate: Long = wedgeSpreadGate): (DataFrame, Seq[DataFrame]) = {
     val spark = e.sparkSession
     val deg = e.select(explode(array(col("a"), col("b"))).as("n"))
@@ -898,9 +794,6 @@ object Graph {
     // (both sizes are derived, so plan-time estimates are unknown).
     // |V| ≤ 2|E| always, so when that bound already clears the cap the
     // exact count job (a per-run barrier) is skipped.
-    val nodeCap =
-      if (broadcastNodeThreshold >= 0L) broadcastNodeThreshold
-      else derivedBroadcastNodeCap(spark)
     val smallV = 2L * nE <= nodeCap || deg.count() <= nodeCap
     def bV(df: DataFrame): DataFrame = if (smallV) broadcast(df) else df
     val withDeg = e
@@ -965,19 +858,6 @@ object Graph {
     * below it, per-bin stacking costs less than the extra task floor. 1e8
     * probe evaluations ≈ a second of single-core work. */
   private[graft] val wedgeSpreadGate = 100000000L
-
-  /** Broadcast cap for the closing-edge set: ~64 bytes/edge resident per
-    * executor JVM as a HashedRelation (two longs + row + table overhead),
-    * same executor-aware derivation as [[derivedBroadcastNodeCap]]. */
-  def derivedBroadcastEdgeCap(spark: org.apache.spark.sql.SparkSession): Long = {
-    val executorBytes = spark.sparkContext.getConf
-      .getOption("spark.executor.memory")
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(Runtime.getRuntime.maxMemory())
-    derivedBroadcastNodeCap(
-      math.min(executorBytes, Runtime.getRuntime.maxMemory()),
-      bytesPerNode = 64L)
-  }
 
   /** Open-addressing long→dense-int id assignment (linear probing, load
     * ≤ 0.5) for the local-path hot loop — a boxed HashMap here costs ~1 s

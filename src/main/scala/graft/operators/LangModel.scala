@@ -83,7 +83,8 @@ object LangModel {
     *
     * @return (true_lang, predicted, n_docs) */
   def nbLangConfusion(docs: DataFrame,
-                      maxBroadcastTypes: Long = 2000000L): DataFrame = {
+                      maxBroadcastTypes: Long =
+                        graft.core.SizeLadder.BroadcastDictEntries): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = docs.select(col("doc_id"), col("lang"),
       explode(split(col("text"), " ")).as("tok"))
@@ -215,7 +216,8 @@ object LangModel {
     *     dictionary side. Both branches are the same exact arithmetic;
     *     PlanAuditSpec pins each branch's shape. */
   def bigramScores(docs: DataFrame,
-                   maxBroadcastTypes: Long = 2000000L): DataFrame = {
+                   maxBroadcastTypes: Long =
+                     graft.core.SizeLadder.BroadcastDictEntries): DataFrame = {
     val b = docs
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 2) // sequence() counts DOWN below 1 elem

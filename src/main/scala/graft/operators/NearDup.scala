@@ -484,7 +484,8 @@ object NearDup {
     * @return (a_id, b_id) distinct candidate pairs, a_id < b_id */
   def selfMinHashPairs(docs: DataFrame, shingleWords: Int = 3,
                        numHashes: Int = 8, bandSize: Int = 2,
-                       sigCheckpointCap: Long = sigCkptCap): DataFrame = {
+                       sigCheckpointCap: Long =
+                         graft.core.SizeLadder.SigCheckpointDocs): DataFrame = {
     require(numHashes % bandSize == 0, "numHashes must be a multiple of bandSize")
     val nBands = numHashes / bandSize
     graft.functions.TextExpressions.register(docs.sparkSession)
@@ -555,13 +556,6 @@ object NearDup {
       .filter(col("x.band") === firstMatch)
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
   }
-
-  /** Doc-count cap under which [[selfMinHashPairs]] eagerly checkpoints
-    * its signature frame instead of recomputing the kernel per join side.
-    * Env-overridable (measurement knob, same pattern as the bench's spin
-    * flags); 0 disables the gate entirely (the pre-r16 always-lazy form). */
-  private def sigCkptCap: Long =
-    graft.core.Env.long("SPARK_GRAFT_SIG_CKPT_CAP", 200000L)
 
   /** Chunk-level (sub-document) dedup — the RefinedWeb/CCNet-style pass
     * that removes repeated passages ACROSS documents while keeping the host

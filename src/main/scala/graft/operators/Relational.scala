@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -257,17 +257,16 @@ object Relational {
   def asofJoinAuto(left: DataFrame, right: DataFrame, keys: Seq[String],
                    leftTime: String, rightTime: String,
                    rightTiebreak: Seq[String] = Nil,
-                   broadcastThreshold: Long = -1L): DataFrame =
+                   // the conf accepts byte-suffixed size strings ("10MB",
+                   // "10m") as well as plain numbers — parse, never .toLong
+                   broadcastThreshold: Long =
+                     org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+                       SparkSession.active.conf
+                         .get("spark.sql.autoBroadcastJoinThreshold", "10485760")))
+      : DataFrame =
     if (rightTiebreak.nonEmpty)
       asofJoin(left, right, keys, leftTime, rightTime, rightTiebreak)
     else {
-      val thresh =
-        if (broadcastThreshold >= 0L) broadcastThreshold
-        // the conf accepts byte-suffixed size strings ("10MB", "10m") as
-        // well as plain numbers — parse, never .toLong the raw string
-        else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          left.sparkSession.conf
-            .get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
       val rBytes = right.queryExecution.optimizedPlan.stats.sizeInBytes
       // the broadcast form's per-key time-sort orders struct(__t, payload)
       // lexicographically (deterministic tie-break), which requires every
@@ -277,7 +276,7 @@ object Relational {
         .filter(f => f.name != rightTime && !keys.contains(f.name))
         .forall(f => org.apache.spark.sql.catalyst.expressions.RowOrdering
           .isOrderable(f.dataType))
-      if (rBytes <= thresh && rOrderable)
+      if (rBytes <= broadcastThreshold && rOrderable)
         asofJoinBroadcast(left, right, keys, leftTime, rightTime)
       else graft.plans.AsofJoin.asof(left, right, keys, leftTime, rightTime)
     }

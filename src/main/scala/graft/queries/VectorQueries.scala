@@ -90,7 +90,7 @@ object VectorQueries {
     * cap bounds one degenerate cluster's replication at 16×. Exact
     * refinement for ANY map — pair set and gate hashes never change. */
   private[graft] def blocksBySize(sizes: Seq[(Long, Long)],
-                                    targetTasks: Int = tileTarget): Map[Long, Int] = {
+                                    targetTasks: Int = TileTarget): Map[Long, Int] = {
     val sumSq = sizes.map { case (_, n) => n.toDouble * n.toDouble }.sum
     if (sumSq <= 0) Map.empty
     else {
@@ -100,17 +100,16 @@ object VectorQueries {
     }
   }
 
-  /** Default pair-grid size; SPARK_GRAFT_SEMDEDUP_TILES overrides for
-    * sweeps (PERF.md records the measured optimum per round). 256 is the
-    * round-12 sf10 optimum under the one-partition-per-tile exchange:
-    * same-window sweep 128 → 23.8–25.3 s, 256 → 16.4–17.5 s, 384 →
-    * 18.6–19.9 s, 512 → 17.3–18.2 s (smaller tiles keep each build table
-    * near-L2 and the makespan granular; past ~256 replication shuffle
-    * gives the gain back). Round 11's "B=4/128 tiles optimal, B=6 gives
-    * back 40–55%" was measured under the STACKED exchange and is
-    * superseded — stacking, not tile size, was the regressor. */
-  private def tileTarget: Int =
-    graft.core.Env.int("SPARK_GRAFT_SEMDEDUP_TILES", 256)
+  /** Default pair-grid size (PERF.md records the measured optimum per
+    * round). 256 is the round-12 sf10 optimum under the
+    * one-partition-per-tile exchange: same-window sweep 128 → 23.8–25.3 s,
+    * 256 → 16.4–17.5 s, 384 → 18.6–19.9 s, 512 → 17.3–18.2 s (smaller
+    * tiles keep each build table near-L2 and the makespan granular; past
+    * ~256 replication shuffle gives the gain back). Round 11's "B=4/128
+    * tiles optimal, B=6 gives back 40–55%" was measured under the STACKED
+    * exchange and is superseded — stacking, not tile size, was the
+    * regressor. */
+  private val TileTarget = 256
 
   private def cosine(dot: Column, n2a: Column, n2b: Column): Column =
     dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))

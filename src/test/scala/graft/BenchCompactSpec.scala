@@ -35,6 +35,7 @@ class BenchCompactSpec extends AnyFunSuite {
     assert(node.get("value").isNumber)
     assert(node.get("sf").asText() == "/root/testdata/sf0.1")
     assert(node.get("probe_quiet").isBoolean)
+    assert(node.get("measure").asText() == "noop")
     val qs = node.get("queries")
     SparkEntry.benchNames.foreach(n => assert(qs.has(n), s"missing query key $n"))
     assert(qs.size() == SparkEntry.benchNames.size)

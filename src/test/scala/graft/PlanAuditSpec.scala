@@ -504,7 +504,7 @@ class PlanAuditSpec extends SparkSpec {
     //     shape AQE never coalesces) — forced here via spreadGate = 0,
     //     unreachable at test scale under the real 1e8 gate
     val (spreadFrame, c3) = graph.triangleCountsFrame(edges, nE,
-      Long.MaxValue, -1L, 0L)
+      Long.MaxValue, spreadGate = 0L)
     val pplan = spreadFrame.queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning\\(src#\\d+L, \\d+\\), REPARTITION_BY_NUM"
         .r.findFirstIn(pplan).isDefined,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.SizeLadder
 
 /** Value-level check of min-label connected components on a graph with a
   * chain (worst case for propagation depth), a triangle, and a disjoint
@@ -163,54 +164,6 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("size-ladder caps derive from the driver heap, not a per-box constant") {
-    // two simulated driver sizes: the cap must scale with the heap, stay
-    // inside its clamps, and keep the local rung's memory spend bounded by
-    // the design fraction at BOTH sizes
-    val cap4g = Graph.derivedLocalEdgeCap(heapBytes = 4L << 30)
-    val cap128g = Graph.derivedLocalEdgeCap(heapBytes = 128L << 30)
-    assert(cap4g == (4L << 30) / 10 / 128,
-      s"4 GiB cap $cap4g is not heap/10/bytesPerEdge")
-    assert(cap4g < cap128g, "cap must grow with the heap")
-    assert(cap128g <= (Int.MaxValue - 8).toLong, "array-ceiling clamp")
-    for ((heap, cap) <- Seq((4L << 30) -> cap4g, (128L << 30) -> cap128g))
-      assert(cap * 128L <= heap / 10 + 128,
-        s"local rung would spend ${cap * 128L} of a $heap heap")
-    // tiny heap clamps to the floor; huge heap to the array ceiling
-    assert(Graph.derivedLocalEdgeCap(heapBytes = 1L << 20) == 1L << 16)
-    assert(Graph.derivedLocalEdgeCap(heapBytes = 1L << 62) == (Int.MaxValue - 8).toLong)
-    val bc4g = Graph.derivedBroadcastNodeCap(heapBytes = 4L << 30)
-    val bc128g = Graph.derivedBroadcastNodeCap(heapBytes = 128L << 30)
-    assert(bc4g == (4L << 30) / 20 / 48 && bc4g < bc128g)
-    // the upper clamp is Spark's 8 GiB broadcast hard limit in node units —
-    // never a node count whose broadcast could not execute at all
-    assert(bc128g == (128L << 30) / 20 / 48 &&
-      Graph.derivedBroadcastNodeCap(heapBytes = 1L << 62) == (8L << 30) / 48)
-    // session-aware derivation: spark.executor.memory (when set) binds the
-    // broadcast, not the driver heap — a big-driver/small-executor cluster
-    // must get the small cap. The conf is static, so the set-branch is
-    // exercised through the split-out core with a simulated cluster value
-    // (and "2g" exercises the size-string parse)
-    assert(Graph.derivedBroadcastNodeCap(spark) ==
-      Graph.derivedBroadcastNodeCapFrom(
-        spark.sparkContext.getConf.getOption("spark.executor.memory")))
-    assert(Graph.derivedBroadcastNodeCapFrom(Some("2g")) ==
-      Graph.derivedBroadcastNodeCap(heapBytes =
-        math.min(2L << 30, Runtime.getRuntime.maxMemory())))
-    assert(Graph.derivedBroadcastNodeCapFrom(None) ==
-      Graph.derivedBroadcastNodeCap(heapBytes = Runtime.getRuntime.maxMemory()))
-    // the derived caps drive the SAME bit-equal rungs: a cap derived from a
-    // simulated tiny heap forces BSP, a big one the local path — results agree
-    import spark.implicits._
-    val edges = (0L until 200L).map(i => (i % 40, (i * 7 + 1) % 40)).toDF("a", "b")
-    val local = Graph.connectedComponents(edges,
-        Graph.derivedLocalEdgeCap(heapBytes = 64L << 30))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bsp = Graph.connectedComponents(edges, 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(local == bsp, "heap-derived rung choice changed the result")
-  }
-
   test("pageRankQ local path scans an expensive upstream exactly once") {
     // the operator persists the edge frame internally, so the size-probe
     // count and the collect must replay one upstream computation, not two
@@ -328,7 +281,8 @@ class GraphSpec extends SparkSpec {
     val r = new scala.util.Random(11)
     val edges = (for { a <- 0L to 24L; b <- 0L to 24L
       if a < b && r.nextDouble() < 0.3 } yield (a, b)).toSet
-    def run(edgeCap: Long, nodeCap: Long = -1L,
+    def run(edgeCap: Long,
+            nodeCap: Long = SizeLadder.executorCap(SizeLadder.BroadcastNodes),
             gate: Long = Graph.wedgeSpreadGate) =
       // localEdgeThreshold = 0: these are the DISTRIBUTED rungs — the
       // r15 local kernel would otherwise swallow every test-sized graph
