@@ -20,14 +20,14 @@ object Sink {
   /** Overwrite exactly the partitions present in `df`; leave all others.
     * Equivalent to the reference's `DELETE WHERE period_start IN (...)` +
     * append, but atomic per-partition and shuffle-free beyond the write. */
-  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+    // a per-write option, not the session conf: every other overwrite in
+    // the session keeps Spark's static mode (AnnIndex.build relies on it)
     df.write
+      .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
       .partitionBy(partitionCols: _*)
       .parquet(path)
-  }
 
   /** Full-table replace — the reference's TRUNCATE+insert
     * (reference: Model/Factory_elect_simulator_update.py:129-142). */

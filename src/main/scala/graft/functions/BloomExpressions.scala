@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{call_function, lit, xxhash64}
 
 /** Bloom-filter semi-join reduction kernels — the runtime-filter pattern
@@ -19,18 +17,11 @@ import org.apache.spark.sql.functions.{call_function, lit, xxhash64}
   * EXACT — which is what puts it on the DuckDB oracle gate (q48).
   *
   * These are Spark's native codegen'd expressions (`BloomFilterAggregate`,
-  * `BloomFilterMightContain`), reached through the same session-registry
-  * route as [[TextExpressions]] — no UDF, no interpreted path.
+  * `BloomFilterMightContain`), injected as `graft_bloom_agg` /
+  * `graft_bloom_contains` by [[graft.GraftExtensions]] — no UDF, no
+  * interpreted path.
   */
 object BloomExpressions {
-
-  def register(spark: SparkSession): Unit = {
-    val reg = Registration.registry(spark)
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "scala_udf")
-  }
 
   /** Aggregate a bloom filter over `xxhash64(key)`. `expectedItems` is the
     * dim-side distinct-key estimate; `numBits` trades memory for fpp

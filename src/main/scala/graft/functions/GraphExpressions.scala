@@ -88,14 +88,6 @@ object GraphExpressions {
     new GenericArrayData(out)
   }
 
-  /** Register as a session function (idempotent) — the public route to a
-    * Column handle for the custom Expression. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = Registration.registry(spark)
-    reg.createOrReplaceTempFunction("graft_unordered_pairs",
-      exprs => UnorderedPairs(exprs(0)), "scala_udf")
-  }
-
   def unorderedPairs(ids: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_unordered_pairs", ids)
 }

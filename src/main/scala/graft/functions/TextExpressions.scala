@@ -540,37 +540,6 @@ object TextExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Register as a session function (idempotent) — the public route to a
-    * Column handle for a custom Expression. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = Registration.registry(spark)
-    reg.createOrReplaceTempFunction("graft_char_grams",
-      exprs => DistinctCharGrams(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_word_grams",
-      exprs => DistinctWordGrams(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_word_gram_windows",
-      exprs => WordGramWindows(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      exprs => MinHashSignature(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bpe_merge",
-      exprs => BpeMergeApply(exprs(0),
-        exprs(1).eval(null).asInstanceOf[UTF8String].toString,
-        exprs(2).eval(null).asInstanceOf[UTF8String].toString), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bpe_pairs",
-      exprs => BpeSymPairs(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_rolling_min_hash",
-      exprs => RollingMinHash(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        exprs(2).eval(null).asInstanceOf[Number].longValue(),
-        exprs(3).eval(null).asInstanceOf[Number].longValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)), "scala_udf")
-  }
-
   def charGrams(text: Column, n: Int): Column =
     org.apache.spark.sql.functions.call_function("graft_char_grams", text,
       org.apache.spark.sql.functions.lit(n))

@@ -116,13 +116,6 @@ object TimeExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Register as a session function (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = Registration.registry(spark)
-    reg.createOrReplaceTempFunction("graft_asof_pick_sorted",
-      exprs => AsofPickSorted(exprs(0), exprs(1)), "scala_udf")
-  }
-
   def asofPickSorted(arr: Column, t: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_asof_pick_sorted", arr, t)
 }

@@ -568,22 +568,6 @@ object VectorExpressions {
     val Threshold = 128
   }
 
-  /** Register the expressions as session functions (idempotent) — the public
-    * route to a Column handle for a custom Expression. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = Registration.registry(spark)
-    reg.createOrReplaceTempFunction("graft_quantized_dot",
-      exprs => QuantizedDot(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_quantized_norm2",
-      exprs => QuantizedNorm2(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_nearest_centroid",
-      exprs => NearestCentroid(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_quantize_vec",
-      exprs => QuantizeVec(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_prequantized_dot",
-      exprs => PreQuantizedDot(exprs(0), exprs(1)), "scala_udf")
-  }
-
   def quantizedDot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_quantized_dot", a, b)
 

@@ -124,7 +124,6 @@ object AnnIndex {
     * partitions. Scores use the engine's exact quantized integers. */
   def search(spark: SparkSession, path: String, query: Array[Float],
              k: Int, nProbe: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val qQuant = query.map(x => math.floor(x * 1000.0 + 0.5).toLong)
     val probes = probeClusters(spark, path, qQuant, nProbe)
     val qLit = array(query.toIndexedSeq.map(lit(_)): _*).cast("array<float>")

@@ -87,7 +87,6 @@ object Bpe {
     * far rather than failing partway.
     * @return Some(rewritten rows, (lhs, rhs, pairCount)), or None */
   def mergeRound(rows: DataFrame): Option[(DataFrame, (String, String, Long))] = {
-    graft.functions.TextExpressions.register(rows.sparkSession)
     val pairs = rows.select(explode(
       graft.functions.TextExpressions.bpeSymPairs(col("syms"))).as("p"))
     // the pair string is `a + ' ' + b` with exactly one separator, so the
@@ -110,7 +109,6 @@ object Bpe {
     * pair counts at vocabulary-sized, not corpus-sized, explode volume.
     * Same deterministic argmax, same `None`-when-exhausted contract. */
   def mergeRoundCounts(rows: DataFrame): Option[(DataFrame, (String, String, Long))] = {
-    graft.functions.TextExpressions.register(rows.sparkSession)
     val pairs = rows.select(explode(
       graft.functions.TextExpressions.bpeSymPairs(col("syms"))).as("p"),
       col("cnt"))
@@ -184,7 +182,6 @@ object Bpe {
         graft.core.SizeLadder.driverCap(graft.core.SizeLadder.LocalVocab))
       : DataFrame = {
     val spark = wordCounts.sparkSession
-    graft.functions.TextExpressions.register(spark)
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // (a, b, pair_count, totalPairs) of the round, or None when no
     // adjacent pair remains anywhere (every word fully merged)
@@ -383,7 +380,6 @@ object Bpe {
     val merges = train(docs, rounds, idCol, textCol)
       .orderBy(col("round")).collect()
       .map(r => (r.getString(1), r.getString(2)))
-    graft.functions.TextExpressions.register(docs.sparkSession)
     var rows = wordSyms(docs, idCol, textCol)
     merges.foreach { case (a, b) =>
       rows = rows.select(col("doc_id"), col("word_idx"),

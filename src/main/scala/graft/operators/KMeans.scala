@@ -79,8 +79,6 @@ object KMeans {
   def lloyd(df: DataFrame, idCol: String, vecCol: String, k: Int,
             iters: Int): (DataFrame, DataFrame) = {
     require(k > 0 && iters > 0, s"k=$k iters=$iters must be positive")
-    // self-register the native kernel for sessions built without GraftExtensions
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val q = df.select(col(idCol).as("id"),
       expr(s"transform($vecCol, v -> CAST(floor(v*1000.0+0.5) AS BIGINT))")
         .as("qv"))
@@ -141,7 +139,6 @@ object KMeans {
     * the pass is one scan — no join, no shuffle. */
   def assignTo(df: DataFrame, idCol: String, vecCol: String,
                centroids: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val cents = parseCentroids(centroids.collect())
     require(cents.nonEmpty, "assignTo needs at least one centroid")
     df.select(col(idCol).as("id"),

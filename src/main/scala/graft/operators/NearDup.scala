@@ -90,7 +90,6 @@ object NearDup {
     * Docs shorter than `n` words yield an empty gram set. */
   def wordGrams(docs: DataFrame, n: Int): DataFrame = {
     val Array(idCol, textCol) = docs.columns.take(2)
-    graft.functions.TextExpressions.register(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"),
       explode(graft.functions.TextExpressions.wordGrams(col(textCol), n))
         .as("gram"))
@@ -253,7 +252,6 @@ object NearDup {
   /** Exploded distinct char-gram stream (doc_id, tok), fanned out to the
     * cluster's parallelism — see `build` for why never a fixed constant. */
   private[graft] def charGramStream(d: DataFrame, gramLen: Int): DataFrame = {
-    graft.functions.TextExpressions.register(d.sparkSession)
     d.repartition(d.sparkSession.sparkContext.defaultParallelism)
       .select(col("doc_id"),
         explode(graft.functions.TextExpressions.charGrams(col("text"), gramLen))
@@ -294,7 +292,6 @@ object NearDup {
   private[graft] def incrementalPairsOver(docSets: DataFrame,
                                           freshIds: DataFrame,
                                           tNum: Int, tDen: Int): DataFrame = {
-    graft.functions.TextExpressions.register(docSets.sparkSession)
     val pp = docSets
       .select(col("doc_id"), col("n"), posexplode(col("prefix")))
       .select(col("doc_id"), col("n"), col("pos").as("p"), col("col").as("tok_id"))
@@ -370,13 +367,6 @@ object NearDup {
                         tNum: Int = 1, tDen: Int = 2): DataFrame = {
     require(numHashes % bandSize == 0, "numHashes must be a multiple of bandSize")
     val nBands = numHashes / bandSize
-    // register on BOTH sides' sessions: Dataset transformations analyze
-    // eagerly on their own session, and under foreachBatch the train side
-    // is a microbatch session CLONE while the eval side lives on the
-    // original session — registering on just one leaves the other's
-    // analyzer unable to resolve the kernel functions
-    graft.functions.TextExpressions.register(train.sparkSession)
-    graft.functions.TextExpressions.register(evalSet.sparkSession)
     // one row per doc: (id, gs = distinct shingles, n, sig) — signature
     // per ROW via the MinHashSignature kernel, so the signature pass has
     // no explode and no shuffle (the agg formulation it replaces exploded
@@ -488,7 +478,6 @@ object NearDup {
                          graft.core.SizeLadder.SigCheckpointDocs): DataFrame = {
     require(numHashes % bandSize == 0, "numHashes must be a multiple of bandSize")
     val nBands = numHashes / bandSize
-    graft.functions.TextExpressions.register(docs.sparkSession)
     // The signature pass stays LAZY above `sigCheckpointCap` even though
     // the self-join evaluates the kernel once per side: materializing it
     // unconditionally was measured round 13 at sf10 and REJECTED —
@@ -631,7 +620,6 @@ object NearDup {
   private def gramWindows(docs: DataFrame, L: Int, idCol: String,
                           textCol: String,
                           extra: Seq[String] = Nil): DataFrame = {
-    graft.functions.TextExpressions.register(docs.sparkSession)
     val keep = col("doc_id") +: extra.map(col)
     docs
       .select((col(idCol).as("doc_id") +: extra.map(col)) :+

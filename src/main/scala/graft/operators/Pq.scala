@@ -53,7 +53,6 @@ object Pq {
   def train(df: DataFrame, idCol: String, vecCol: String,
             m: Int, k: Int, iters: Int): Codebooks = {
     require(k > 0 && iters > 0, s"k=$k iters=$iters must be positive")
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val q0 = df.select(col(idCol).as("id"),
       expr(s"transform($vecCol, v -> CAST(floor(v*1000.0+0.5) AS BIGINT))")
         .as("qv"))
@@ -101,7 +100,6 @@ object Pq {
     * literal arrays, no join. */
   def encode(df: DataFrame, idCol: String, vecCol: String,
              cb: Codebooks): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val codes = (0 until cb.m).map { s =>
       KMeans.bestCentroid(cb.books(s), quantExpr(vecCol, s, cb.subDim))
         .getField("cluster").cast("int")

@@ -214,7 +214,6 @@ object Relational {
     require(left.schema(leftTime).dataType == right.schema(rightTime).dataType,
       s"as-of time columns must share a type: ${left.schema(leftTime).dataType
         .simpleString} vs ${right.schema(rightTime).dataType.simpleString}")
-    graft.functions.TimeExpressions.register(left.sparkSession)
     // pack: one (time, payload) array per key, sorted ascending by time
     // (struct sort is lexicographic and __t is the first field — which also
     // makes the equal-timestamp pick deterministic, but requires every

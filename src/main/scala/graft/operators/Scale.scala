@@ -108,7 +108,6 @@ object Scale {
   def bloomPrune(fact: DataFrame, dim: DataFrame, factKey: String,
                  dimKey: String, expectedItems: Long = 1000000L,
                  numBits: Long = 8L * 1000000L): DataFrame = {
-    graft.functions.BloomExpressions.register(fact.sparkSession)
     val bf = dim
       .agg(graft.functions.BloomExpressions
         .bloomAgg(col(dimKey), expectedItems, numBits).as("bf"))
@@ -148,7 +147,6 @@ object Scale {
   def bloomAntiJoin(fact: DataFrame, dim: DataFrame, factKey: String,
                     dimKey: String, expectedItems: Long = 1000000L,
                     numBits: Long = 8L * 1000000L): DataFrame = {
-    graft.functions.BloomExpressions.register(fact.sparkSession)
     def bloomOf(df: DataFrame, key: String): Array[Byte] = df
       .where(col(key).isNotNull)
       .agg(graft.functions.BloomExpressions

@@ -56,8 +56,8 @@ case class AsofJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsofJoinNode]] as [[AsofJoinExec]]; injected via
-  * `GraftExtensions` (or idempotently by [[AsofJoin.asof]]). */
+/** Plans [[AsofJoinNode]] as [[AsofJoinExec]]; injected by
+  * [[graft.GraftExtensions]]. */
 class AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoinNode(l, r, lk, rk, lt, rt) =>
@@ -191,8 +191,6 @@ object AsofJoin {
   def asof(left: DataFrame, right: DataFrame, keys: Seq[String],
            leftTime: String, rightTime: String): DataFrame = {
     val spark = left.sparkSession
-    GraftSqlShims.addStrategy(spark, new AsofJoinStrategy)
-    GraftSqlShims.addOptimizations(spark, Seq(AsofFilterPushdown, AsofPayloadPruning))
     // re-alias both sides so the node's captured attribute ids are fresh
     // aliases: when the two inputs share lineage (e.g. both filtered from
     // one frame), the analyzer's relation deduplication rewrites ids INSIDE

@@ -13,11 +13,9 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * column. These two rules teach the optimizer the operator's algebra so
   * the standard rewrites flow through it — predicates reach the parquet
   * scans' `PushedFilters` and unused payload columns drop out of
-  * `ReadSchema`, exactly as they would for a built-in join. Registered via
+  * `ReadSchema`, exactly as they would for a built-in join. Injected by
   * `GraftExtensions.injectOptimizerRule` (inside the fixed-point operator
-  * optimization batch, so the pushed pieces keep optimizing) and
-  * idempotently through `experimental.extraOptimizations` for sessions
-  * built without the extension (AsofJoin.asof).
+  * optimization batch, so the pushed pieces keep optimizing).
   */
 object AsofFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -42,10 +42,6 @@ object Q {
   def TEvents(s: SparkSession, dir: String): DataFrame =
     graft.core.Memo(s, s"table-events:$dir")(graft.core.Tables.events(s, dir))
 
-  /** Memoize a built DataFrame per (session, key) — see [[graft.core.Memo]]. */
-  def memo(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    graft.core.Memo(s, key)(build)
-
   /** DuckDB-side exact cents: same IEEE expression as [[graft.functions.Money.cents]]. */
   def sqlCents(x: String): String = s"CAST(floor(($x)*100+0.5) AS BIGINT)"
   /** DuckDB-side exact 1e-4 units (2-decimal × 2-decimal products). */

@@ -1549,18 +1549,14 @@ object RelationalQueries {
       // it shuffles a handful of partial rows per task by design. At
       // small surfaces the planner would broadcast the orders side —
       // exchange-free trivially, proving nothing about bucketing — so the
-      // assertion pins the plan with broadcast DISABLED: the shuffle-join
-      // path must co-locate purely from the bucketed scans' distribution.
-      val saved = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val joinOnly = s.table(liT)
-          .join(s.table(osT), col("l_orderkey") === col("o_orderkey"))
-        val plan = joinOnly.queryExecution.executedPlan.toString
-        require(graft.operators.Scale.isExchangeFree(joinOnly) &&
-            (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin")),
-          s"bucketed q58 join plan still shuffles:\n$plan")
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+      // assertion pins a shuffle join with a hint on this one join: it
+      // must co-locate purely from the bucketed scans' distribution.
+      val joinOnly = s.table(liT)
+        .join(s.table(osT).hint("shuffle_merge"), col("l_orderkey") === col("o_orderkey"))
+      val plan = joinOnly.queryExecution.executedPlan.toString
+      require(graft.operators.Scale.isExchangeFree(joinOnly) &&
+          (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin")),
+        s"bucketed q58 join plan still shuffles:\n$plan")
       (liT, osT)
     })
   }

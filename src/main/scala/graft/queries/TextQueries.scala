@@ -285,7 +285,7 @@ object TextQueries {
     // non-integer scores on the hash-match surface. One shuffle for tf,
     // one broadcast-joined df, one bounded per-doc window. ----
     Q("t12_tfidf_topk",
-      (s, dir) => Q.memo(s, s"t12_tfidf_topk:$dir") {
+      (s, dir) => graft.core.Memo(s, s"t12_tfidf_topk:$dir") {
         val toks = T(s, dir, "documents")
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
         val tf = toks.groupBy(col("doc_id"), col("tok"))
@@ -492,7 +492,6 @@ object TextQueries {
     // every intermediate fits a BIGINT. ----
     Q("t16_fingerprint_rolling",
       (s, dir) => {
-        graft.functions.TextExpressions.register(s)
         val rfp = graft.functions.TextExpressions
           .rollingMinHash(col("text"), 8, 257L, 1000000007L)
         T(s, dir, "documents")

@@ -41,7 +41,6 @@ object VectorQueries {
     * shared with the frozen-centroid form (s13) and the incremental disk
     * index ([[graft.jobs.SemDeDupIndex]]). */
   private[queries] def semDedup(s: SparkSession, e: DataFrame, k: Int): DataFrame = {
-    VectorExpressions.register(s)
     val (assign0, _) = graft.operators.KMeans.lloyd(
       e, "vec_id", "embedding", k = k, iters = 2)
     // materialize the assignment ONCE: both the size histogram and the
@@ -143,7 +142,6 @@ object VectorQueries {
     * (most-similar candidates from OTHER classes). */
   private def knn(s: SparkSession, dir: String, labelMode: String,
                   k: Int): DataFrame = {
-    VectorExpressions.register(s)
     val e = T(s, dir, "embeddings")
     // precompute each side's squared norm BEFORE the join: norms are computed
     // once per vector instead of once per (query, candidate) pair
@@ -218,7 +216,6 @@ object VectorQueries {
     // join), the standard scale pattern for embedding dedup. ----
     Q("s04_embedding_neardup",
       (s, dir) => {
-        VectorExpressions.register(s)
         val e = T(s, dir, "embeddings")
         val a = e.select(col("label"), col("vec_id").as("a_id"),
           col("embedding").as("a_emb"), norm2Q(col("embedding")).as("a_n2"))
@@ -258,7 +255,6 @@ object VectorQueries {
     // so each query reads exactly two partitions. ----
     Q("s05_knn_ivf_multiprobe",
       (s, dir) => {
-        VectorExpressions.register(s)
         val e = T(s, dir, "embeddings")
         val el = e.select(col("vec_id"), col("label"),
             posexplode(col("embedding")).as(Seq("i0", "v")))
@@ -352,7 +348,6 @@ object VectorQueries {
     // hyperplane table is a 1024-row broadcast constant. ----
     Q("s06_lsh_neardup",
       (s, dir) => {
-        VectorExpressions.register(s)
         val e = T(s, dir, "embeddings")
         val el = e.select(col("vec_id"),
             posexplode(col("embedding")).as(Seq("i0", "v")))
@@ -431,7 +426,6 @@ object VectorQueries {
     // ---- per-cluster vector stats (exact-integer norms) ----
     Q("s03_vector_stats",
       (s, dir) => {
-        VectorExpressions.register(s)
         val e = T(s, dir, "embeddings")
           .withColumn("n2", norm2Q(col("embedding")))
           .withColumn("norm", sqrt(col("n2").cast("double")) / 1000.0)
@@ -626,7 +620,6 @@ object VectorQueries {
     // corpus-wide. ----
     Q("s13_semdedup_frozen",
       (s, dir) => {
-        VectorExpressions.register(s)
         val e = T(s, dir, "embeddings")
         val (_, cents) = graft.operators.KMeans.lloyd(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",

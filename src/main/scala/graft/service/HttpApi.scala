@@ -3,6 +3,8 @@ package graft.service
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** The reference's HTTP entry points (SURVEY.md §3.2/§3.3) as a thin layer
   * over the engine seams — JDK `HttpServer`, zero added dependencies, no
@@ -33,6 +35,9 @@ import java.nio.charset.StandardCharsets
   * this class owns only routing, JSON framing, and task lifecycle.
   */
 object Api {
+
+  /** Name prefix of the request-handler threads [[Api.start]] creates. */
+  val HandlerThreadPrefix = "graft-api-handler-"
 
   /** What the endpoints do, supplied by the embedder. Each hook returns
     * the task's result string (celery_taskmeta.result analog). */
@@ -137,6 +142,7 @@ final class Api(runner: TaskRunner, hooks: Api.Hooks,
   import Api._
 
   private var server: HttpServer = _
+  private var handlers: ExecutorService = _
 
   /** Bind on an ephemeral (or given) port; returns the bound port. */
   def start(port: Int = 0): Int = {
@@ -144,13 +150,22 @@ final class Api(runner: TaskRunner, hooks: Api.Hooks,
     // without an executor every handler runs on the single dispatcher
     // thread — the inline §3.3 mini-DAG would block every /tasks poll for
     // its whole runtime
-    server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
+    val seq = new AtomicInteger()
+    handlers = Executors.newCachedThreadPool(r =>
+      new Thread(r, s"$HandlerThreadPrefix${seq.incrementAndGet()}"))
+    server.setExecutor(handlers)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
     server.start()
     server.getAddress.getPort
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Unbind and end every handler thread; a handler still running gets
+    * up to 10 s to finish its response. */
+  def stop(): Unit = if (server != null) {
+    server.stop(0)
+    handlers.shutdown()
+    handlers.awaitTermination(10, TimeUnit.SECONDS)
+  }
 
   private def respond(ex: HttpExchange, code: Int, json: String): Unit = {
     val bytes = json.getBytes(StandardCharsets.UTF_8)

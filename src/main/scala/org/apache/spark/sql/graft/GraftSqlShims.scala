@@ -28,26 +28,4 @@ object GraftSqlShims {
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[ClassicSparkSession].internalCreateDataFrame(rdd, schema)
-
-  /** Idempotently add an extra planner strategy to this session. */
-  def addStrategy(spark: SparkSession,
-                  strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val cs = spark.asInstanceOf[ClassicSparkSession]
-    val present = cs.experimental.extraStrategies.exists(_.getClass == strategy.getClass)
-    if (!present)
-      cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ strategy
-  }
-
-  /** Idempotently add extra optimizer rules to this session (the imperative
-    * twin of `SparkSessionExtensions.injectOptimizerRule`; these run in the
-    * optimizer's final user-provided fixed-point batch). */
-  def addOptimizations(spark: SparkSession,
-                       rules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
-                         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]]): Unit = {
-    val cs = spark.asInstanceOf[ClassicSparkSession]
-    val fresh = rules.filterNot(r =>
-      cs.experimental.extraOptimizations.exists(_.getClass == r.getClass))
-    if (fresh.nonEmpty)
-      cs.experimental.extraOptimizations = cs.experimental.extraOptimizations ++ fresh
-  }
 }

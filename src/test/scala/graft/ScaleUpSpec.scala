@@ -66,7 +66,6 @@ class ScaleUpSpec extends SparkSpec {
   }
 
   test("distinct mode: signed permutation preserves intra-replica quantized dots exactly, kills cross-replica cosine") {
-    graft.functions.VectorExpressions.register(spark)
     val off = 1000000000L
     val base = spark.read.parquet(s"$sfSmoke/embeddings.parquet")
       .filter(col("vec_id") < 40)

@@ -50,6 +50,14 @@ class CoreSpec extends SparkSpec {
       ("2026-02", "c", 30.0)))
   }
 
+  test("overwritePartitions leaves the session's partition overwrite mode unchanged") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    Sink.overwritePartitions(Seq(("2026-01", 1.0)).toDF("period", "amount"),
+      Files.createTempDirectory("sink_mode").toString + "/t", Seq("period"))
+    assert(spark.conf.getOption(key) == before)
+  }
+
   test("Memo supports nested builds (memoized builder loading memoized inputs)") {
     // regression: computeIfAbsent-based Memo threw "Recursive update" when a
     // memoized query builder called Memo again for its table loads and the

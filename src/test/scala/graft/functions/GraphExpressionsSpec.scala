@@ -7,7 +7,6 @@ class GraphExpressionsSpec extends SparkSpec {
 
   test("unordered_pairs emits every pair min-first regardless of input order") {
     import spark.implicits._
-    GraphExpressions.register(spark)
     val got = Seq(Seq(3L, 1L, 2L)).toDF("ids")
       .select(explode(GraphExpressions.unorderedPairs(col("ids"))).as("e"))
       .select(col("e.a"), col("e.b"))
@@ -17,7 +16,6 @@ class GraphExpressionsSpec extends SparkSpec {
 
   test("unordered_pairs of empty and singleton arrays explode to zero rows") {
     import spark.implicits._
-    GraphExpressions.register(spark)
     val got = Seq(Seq.empty[Long], Seq(7L)).toDF("ids")
       .select(explode(GraphExpressions.unorderedPairs(col("ids"))))
     assert(got.count() == 0L)

@@ -23,7 +23,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("charGrams equals the HOF formulation for length >= n") {
     import spark.implicits._
-    TextExpressions.register(spark)
     for (n <- Seq(1, 3, 4, 5)) {
       val df = samples.toDF("text").filter(length(col("text")) >= n)
         .select(
@@ -38,7 +37,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("charGrams yields empty array for texts shorter than n") {
     import spark.implicits._
-    TextExpressions.register(spark)
     val out = Seq("ab", "", "abc").toDF("text")
       .select(TextExpressions.charGrams(col("text"), 4).as("g"))
       .collect().map(_.getSeq[String](0))
@@ -47,7 +45,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("rollingMinHash computes the exact min polynomial window hash") {
     import spark.implicits._
-    TextExpressions.register(spark)
     // reference computation in plain Scala
     def ref(s: String, n: Int, b: Long, m: Long): Option[Long] =
       if (s.length < n) None
@@ -76,7 +73,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("sortedIntersectSize equals size(array_intersect) on sorted distinct arrays") {
     import spark.implicits._
-    TextExpressions.register(spark)
     val rnd = new scala.util.Random(3)
     val rows = Seq.tabulate(300) { i =>
       def set() = Seq.fill(rnd.nextInt(20))(rnd.nextInt(40)).distinct.sorted
@@ -104,7 +100,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("wordGrams equals the HOF formulation it replaces, incl. empty tokens") {
     import spark.implicits._
-    TextExpressions.register(spark)
     val texts = samples ++ Seq(
       "a  b c",       // double space -> empty token, kept by split(limit=-1)
       " leading", "trailing ", "one two one two one two")
@@ -123,7 +118,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("wordGramWindows equals the positional HOF formulation it replaces") {
     import spark.implicits._
-    TextExpressions.register(spark)
     val texts = samples ++ Seq("a  b c", " leading", "trailing ",
       "one two one two one two")
     for (n <- Seq(1, 2, 3, 5)) {
@@ -149,7 +143,6 @@ class TextExpressionsSpec extends SparkSpec {
 
   test("minHashSignature skips null elements instead of NPE-ing") {
     import spark.implicits._
-    TextExpressions.register(spark)
     // a nullable-element array (SQL arrays are nullable by default): the
     // signature must equal the one over the non-null elements, and an
     // all-null array must behave like an empty set (ADVICE r8)

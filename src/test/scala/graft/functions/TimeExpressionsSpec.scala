@@ -23,7 +23,6 @@ class TimeExpressionsSpec extends SparkSpec {
       "transform(raw, e -> struct(e._1 as __t, struct(e._2 as v) as __p))"))
 
   test("asofPickSorted picks the last element at-or-before t (codegen path)") {
-    TimeExpressions.register(spark)
     val got = fixture
       .select(TimeExpressions.asofPickSorted(col("arr"), col("t")).as("p"))
       .select(col("p.v")).collect()
@@ -32,7 +31,6 @@ class TimeExpressionsSpec extends SparkSpec {
   }
 
   test("asofPickSorted equals the HOF formulation on random sorted arrays") {
-    TimeExpressions.register(spark)
     val rnd = new scala.util.Random(17)
     val rows = Seq.tabulate(300) { i =>
       val n = rnd.nextInt(6)
@@ -53,7 +51,6 @@ class TimeExpressionsSpec extends SparkSpec {
   }
 
   test("asofPickSorted nulls through null array or null time") {
-    TimeExpressions.register(spark)
     val df = Seq(
       (Some(5L), Some(Seq((1L, "a")))),
       (None, Some(Seq((1L, "a")))),

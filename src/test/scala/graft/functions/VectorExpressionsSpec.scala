@@ -16,7 +16,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("quantizedDot/Norm2 equal the HOF formulation on real embeddings") {
-    VectorExpressions.register(spark)
     val e = spark.read.parquet(s"$sfSmoke/embeddings.parquet").limit(50)
     val cmp = e.select(
       VectorExpressions.quantizedDot(col("embedding"), col("embedding")).as("native"),
@@ -31,7 +30,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("expressions survive both codegen and interpreted paths") {
-    VectorExpressions.register(spark)
     val df = Seq((Array(1.0f, 2.0f), Array(3.0f, 0.5f))).toDF("a", "b")
     val got = df.select(
       VectorExpressions.quantizedDot(col("a"), col("b")).as("d"),
@@ -56,7 +54,6 @@ class VectorExpressionsSpec extends SparkSpec {
     // pair — must produce the identical integers to the fused expression
     // (and hence identical cosines/hashes) on every real vector, both
     // codegen and interpreted
-    VectorExpressions.register(spark)
     val e = spark.read.parquet(s"$sfSmoke/embeddings.parquet").limit(100)
     val prev = e.select(col("vec_id"), col("embedding"))
       .withColumnRenamed("vec_id", "b_id").withColumnRenamed("embedding", "b_emb")
@@ -83,7 +80,6 @@ class VectorExpressionsSpec extends SparkSpec {
     // element with |x| > ~2.1e6 must ERROR here (Math.toIntExact), never
     // silently saturate and diverge from the fused path — both codegen
     // and interpreted
-    VectorExpressions.register(spark)
     val df = Seq(Tuple1(Array(3.0e6f))).toDF("a")
     val thrown = intercept[Exception] {
       df.select(VectorExpressions.quantizeVec(col("a"))).collect()
@@ -107,7 +103,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("null input yields null, not a crash") {
-    VectorExpressions.register(spark)
     val df = Seq((Some(Array(1.0f)), Option.empty[Array[Float]]))
       .toDF("a", "b")
     val r = df.select(VectorExpressions.quantizedDot(col("a"), col("b")).as("d"))

@@ -71,6 +71,21 @@ class IndexRebuildSpec extends SparkSpec {
       "vectors assigned under the old centroids leaked into the rebuild")
   }
 
+  test("AnnIndex.build with a smaller k after a Sink write drops the old clusters") {
+    // a dynamic-overwrite Sink write earlier in the session must not turn
+    // build's overwrite of batch 0 dynamic: clusters 2 and 3 of the k = 4
+    // build would then survive the k = 2 rebuild
+    graft.core.Sink.overwritePartitions(Seq(("2026-01", 1.0)).toDF("period", "amount"),
+      Files.createTempDirectory("ann_rebuild_sink").toString + "/t", Seq("period"))
+    val e = spark.read.parquet(s"$sfSmoke/embeddings.parquet")
+    val dir = Files.createTempDirectory("ann_rebuild_k").toString
+    AnnIndex.build(e, "vec_id", "embedding", k = 4, iters = 2, dir)
+    AnnIndex.build(e, "vec_id", "embedding", k = 2, iters = 2, dir)
+    val clusters = spark.read.parquet(s"$dir/vectors")
+      .select("cluster").distinct().as[Int].collect().toSet
+    assert(clusters == Set(0, 1))
+  }
+
   test("NearDupIndex.build over a dirty path clears appended doc sets") {
     val a = Seq(1L -> "alpha beta gamma delta epsilon zeta",
       2L -> "eta theta iota kappa lambda mu").toDF("doc_id", "text")

@@ -184,4 +184,19 @@ class ApiSpec extends SparkSpec {
         mail.body.contains("simulator blew up"))
     } finally { api.stop(); runner.shutdown() }
   }
+
+  test("stop() ends every request-handler thread") {
+    val runner = new TaskRunner()
+    val api = new Api(runner, Api.Hooks(
+      establish = (_, _) => "", notifyReviewer = (_, _, _, _) => "",
+      solarRefresh = () => ""))
+    def handlers() = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName.startsWith(Api.HandlerThreadPrefix))
+    try {
+      val port = api.start()
+      assert(get(port, "/no_such_route")._1 == 404)
+      assert(handlers().nonEmpty, "the request ran on no named handler thread")
+    } finally { api.stop(); runner.shutdown() }
+    assert(handlers().isEmpty)
+  }
 }
