@@ -4,7 +4,7 @@
 # +21% co-tenant-inflated with no pairing of record, and the honest ratio
 # had to be re-measured by the judge).
 #
-# Methodology (MEMORY/PERF.md): run graft.Bench and scripts/bench_duckdb.py
+# Methodology (PERF.md): run graft.Bench and scripts/bench_duckdb.py
 # BACK-TO-BACK in one window, warm shared DuckDB connection, min-of-2 per
 # query on both sides, totals over the intersection of query names that
 # completed on both engines. Co-tenant load inflates both sides equally in
@@ -33,34 +33,11 @@ trap 'rm -rf "$ORACLE_DIR"' EXIT
 scripts/run_verify.sh /root/testdata/sf0.001 "$ORACLE_DIR" graft.Verify \
   q01_groupby_sum >/dev/null 2>&1
 
-# Ambient load at window START — captured BEFORE any engine work, so the
-# 1-min figure is pure co-tenant signal (the end-of-window capture is
-# self-polluted by the bench's own 32 threads and kept for context only).
-# Round-13 verdict #3: the 1.60x window's "in-VM load spike" was narrative;
-# this makes band-width attribution mechanical.
-LOAD_START=$(cut -d' ' -f1,2 /proc/loadavg)
-
-# Effective CPU speed at window START: a fixed single-thread spin, timed.
-# Round-14 measured the host running the SAME spin at 0.79 s in the
-# morning and 1.23 s in the afternoon WITH LOADAVG 0.08 — hypervisor
-# frequency/cap changes are invisible to loadavg, and standalone bench
-# totals moved 36 -> 73 s on identical code in exactly those windows. The
-# spin is the mechanical detector loadavg cannot be. Within one window
-# the ratio stays honest (both engines share the slowdown); the spin
-# explains RAW-total drift across windows.
-cpu_spin() { python3 -c "
-import time
-t0=time.perf_counter(); x=0
-for i in range(10_000_000): x+=i*i
-print(round(time.perf_counter()-t0, 3))"; }
-SPIN_START=$(cpu_spin)
-
 echo "[pair] engine bench on $SF ..." >&2
 # The engine leg's full per-query map lands in THIS window's artifact —
 # a pairing run must not also overwrite the rounds/BENCH_full_latest
-# record snapshot as a side effect (r15: two degraded pair windows
-# clobbered the snapshot that way; record cuts are deliberate
-# SPARK_GRAFT_RECORD=1 graft.Bench runs, not pairing by-products)
+# snapshot as a side effect (r15: two degraded pair windows clobbered the
+# snapshot that way)
 ENGINE_JSON=$(SPARK_GRAFT_SF_DIR="$SF" \
   SPARK_GRAFT_BENCH_OUT=$(mktemp /tmp/pair_engine.XXXX.json) \
   scripts/run_verify.sh x x graft.Bench 2>/dev/null | tail -1)
@@ -70,18 +47,9 @@ NAMES=$(python3 -c "import json,sys; print(' '.join(sorted(json.loads(sys.argv[1
 DUCK_JSON=$(DUCK_TIMEOUT_SEC=${DUCK_TIMEOUT_SEC:-120} \
   python3 scripts/bench_duckdb.py "$SF" "$ORACLE_DIR/oracle_sql.json" $NAMES)
 
-LOAD_END=$(cut -d' ' -f1,2 /proc/loadavg)
-SPIN_END=$(cpu_spin)
-
-python3 - "$ENGINE_JSON" "$DUCK_JSON" "$SF" "$OUT" "$LOAD_START" "$LOAD_END" "$SPIN_START" "$SPIN_END" <<'EOF'
+python3 - "$ENGINE_JSON" "$DUCK_JSON" "$SF" "$OUT" <<'EOF'
 import json, os, sys, datetime
 eng, duck, sf, out = json.loads(sys.argv[1]), json.loads(sys.argv[2]), sys.argv[3], sys.argv[4]
-load_start = [float(x) for x in sys.argv[5].split()]
-load_end = [float(x) for x in sys.argv[6].split()]
-spin_start, spin_end = float(sys.argv[7]), float(sys.argv[8])
-# a window is load-flagged when AMBIENT (pre-run) 1-min load exceeds the
-# threshold — deltas measured in it are co-tenant noise, not engine drift
-load_flag_at = float(os.environ.get("PAIR_LOAD_FLAG", "4.0"))
 shared = sorted(set(eng["queries"]) & set(duck["queries"]))
 et = sum(eng["queries"][n] for n in shared)
 dt = sum(duck["queries"][n] for n in shared)
@@ -92,27 +60,14 @@ window = {
     "engine_total_sec": round(et, 3),
     "duckdb_total_sec": round(dt, 3),
     "ratio": round(et / dt, 3) if dt else None,
-    "loadavg_start_1m_5m": load_start,
-    "loadavg_end_1m_5m": load_end,
-    # fixed single-thread spin (10M-iter int loop), seconds: the effective-
-    # CPU-speed index. ~0.79 s on this box at full speed; PAIR_SPIN_FLAG
-    # (default 1.0) marks windows where the host itself was slow — a raw-
-    # total delta vs such a window is host speed, not engine drift.
-    # Flag on max(start, end): a window where the host degrades MID-run
-    # (quiet start, slow end — the documented afternoon mode) measured its
-    # tail queries degraded and must not enter the quiet band (r14 ADVICE).
-    "cpu_spin_start_sec": spin_start,
-    "cpu_spin_end_sec": spin_end,
-    "cpu_spin_max_sec": round(max(spin_start, spin_end), 3),
-    "cpu_flagged": max(spin_start, spin_end) > float(os.environ.get("PAIR_SPIN_FLAG", "1.0")),
-    "load_flagged": load_start[0] > load_flag_at,
+    # graft.Bench's own reading of the host: both JVM spin probes, at the
+    # start and the end of the engine leg, under their quiet thresholds.
+    # The ratio stays honest either way (both engines share the window);
+    # the flag says whether the raw totals may be compared across windows.
+    "probe_quiet": eng.get("probe_quiet"),
     "engine_only": sorted(set(eng["queries"]) - set(duck["queries"])),
     "duckdb_errors": duck.get("errors", {}),
     "engine_passes": eng.get("passes"),
-    # per-pass arrays + the >1.5x-spread flags (round-12 verdict #6): a
-    # delta on a flagged query is ordering noise, not a plan change
-    "engine_pass_times": eng.get("pass_times"),
-    "engine_noisy": eng.get("noisy"),
     "engine": eng["queries"],
     "duckdb": duck["queries"],
 }
@@ -127,42 +82,6 @@ if os.environ.get("PAIR_RESET") != "1" and os.path.exists(out):
         print(f"[pair] WARNING: could not parse existing {out}: {e}",
               file=sys.stderr)
 runs.append(window)
-# Spin-normalized ratio (r14 verdict #5): on a volatile host most windows
-# are flagged, so instead of discarding them, fit ratio ~ a + b*spin over
-# this sf's windows (the asymmetric-slowdown model: Spark's 32-thread
-# stages absorb co-tenant memory pressure worse than DuckDB's loops, so
-# the RATIO itself drifts up with the spin reading — r14 windows 4/5) and
-# report each window re-based to the best spin reading observed. The fit
-# is recomputed over ALL windows at each append and every window's
-# normalized field is rewritten, so the artifact stays self-consistent
-# under one model; resid_rms is the model's own honesty check (PERF.md
-# documents it on the round's paired data). Needs >=3 windows with >=0.15 s
-# spin spread; otherwise normalized fields are omitted.
-def spin_of(r):
-    if r.get("cpu_spin_max_sec") is not None: return r["cpu_spin_max_sec"]
-    s, e = r.get("cpu_spin_start_sec"), r.get("cpu_spin_end_sec")
-    if s is None: return None
-    return max(s, e) if e is not None else s
-fit_pts = [(spin_of(r), r["ratio"]) for r in runs
-           if r.get("sf") == sf and r.get("ratio") is not None
-           and spin_of(r) is not None]
-spin_fit = None
-if len(fit_pts) >= 3 and max(x for x, _ in fit_pts) - min(x for x, _ in fit_pts) >= 0.15:
-    n = len(fit_pts)
-    mx = sum(x for x, _ in fit_pts) / n
-    my = sum(y for _, y in fit_pts) / n
-    sxx = sum((x - mx) ** 2 for x, _ in fit_pts)
-    b = sum((x - mx) * (y - my) for x, y in fit_pts) / sxx
-    a = my - b * mx
-    spin_ref = min(x for x, _ in fit_pts)
-    resid = [y - (a + b * x) for x, y in fit_pts]
-    spin_fit = {"slope": round(b, 4), "intercept": round(a, 4),
-                "spin_ref_sec": spin_ref, "n_fit": n,
-                "resid_rms": round((sum(r * r for r in resid) / n) ** 0.5, 4)}
-    for r in runs:
-        if r.get("sf") == sf and r.get("ratio") is not None and spin_of(r) is not None:
-            r["ratio_spin_normalized"] = round(
-                r["ratio"] - b * (spin_of(r) - spin_ref), 3)
 with open(out, "w") as f:
     json.dump(runs, f, indent=1, sort_keys=False)
     f.write("\n")
@@ -170,30 +89,14 @@ with open(out, "w") as f:
 # recorded against a different SF_DIR (or left over when PAIR_RESET was
 # forgotten across rounds) are incomparable and must not merge into one
 # band.
-at_sf = [r for r in runs if r.get("ratio") is not None and r.get("sf") == sf]
-ratios = [r["ratio"] for r in at_sf]
-# quiet band = windows neither load- nor cpu-flagged (legacy windows
-# without the fields count as quiet — they predate the captures and were
-# hand-attributed). Note the RATIO inside a cpu-flagged window is still
-# honest (both engines share the slow host); the flag exists so RAW
-# totals are never compared across unlike windows.
-quiet = [r["ratio"] for r in at_sf
-         if not r.get("load_flagged", False) and not r.get("cpu_flagged", False)]
+ratios = [r["ratio"] for r in runs if r.get("ratio") is not None and r.get("sf") == sf]
 other_sf = sorted({r.get("sf") for r in runs if r.get("sf") != sf})
 if other_sf:
     print(f"[pair] WARNING: {out} mixes sf values {other_sf} with current "
           f"sf={sf}; band covers only sf={sf} windows", file=sys.stderr)
 print(json.dumps({**{k: window[k] for k in
     ("window_utc", "sf", "n_shared", "engine_total_sec",
-     "duckdb_total_sec", "ratio", "loadavg_start_1m_5m", "load_flagged",
-     "cpu_spin_start_sec", "cpu_flagged")},
+     "duckdb_total_sec", "ratio", "probe_quiet")},
     "n_windows": len(runs), "n_windows_at_sf": len(ratios),
-    "band": [min(ratios), max(ratios)] if ratios else None,
-    "band_quiet": [min(quiet), max(quiet)] if quiet else None,
-    "n_flagged": len(ratios) - len(quiet),
-    "ratio_spin_normalized": window.get("ratio_spin_normalized"),
-    "spin_fit": spin_fit,
-    "band_normalized": (lambda ns: [min(ns), max(ns)] if ns else None)(
-        [r["ratio_spin_normalized"] for r in at_sf
-         if r.get("ratio_spin_normalized") is not None])}))
+    "band": [min(ratios), max(ratios)] if ratios else None}))
 EOF

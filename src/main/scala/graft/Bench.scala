@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import graft.core.Env
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -40,8 +41,7 @@ object Bench {
     * memory latency (it read 152–160 ns/load in the degraded window).
     * Recording both at start/end of every artifact makes raw-total drift
     * across windows attributable mechanically, with quiet-window baselines
-    * accumulating in the artifacts themselves (pair_bench.sh carries a
-    * python spin with the same role). */
+    * accumulating in the artifacts themselves. */
   private def spinSeconds(body: () => Long): Double = {
     val sink = body() // JIT-warmup pass; result observable so the loop can't DCE
     val t0 = System.nanoTime()
@@ -60,7 +60,7 @@ object Bench {
     * tracks memory pressure (the array is rebuilt per call; ~1 s quiet).
     * 64 MB (16M Ints) exceeds this host's 54 MiB L3, so the walk misses
     * to DRAM; kept at 64 MB rather than doubled because every accumulated
-    * quiet-window baseline (PERF.md, rounds/, the record gate below) is in
+    * quiet-window baseline (PERF.md, rounds/) is in
     * this probe's units — resizing it would orphan them all. On a future
     * host with L3 ≥ 64 MB the probe would read cache-resident and the
     * size (and baselines) must be revisited together. */
@@ -80,78 +80,23 @@ object Bench {
     }
   }
 
-  /** Quiet-window thresholds for the two JVM spin probes, env-overridable.
-    * Defaults from the accumulated artifacts: spin_reg reads 0.20–0.30 s
-    * quiet (no degraded window ever moved it much — it tracks frequency
-    * caps, which this host doesn't apply); spin_mem reads ~0.95–1.3 s
-    * quiet and 1.47–2.2 s in every documented degraded window, so the
-    * flag sits in the gap. */
-  private[graft] def spinRegFlag: Double =
-    Env.double("SPARK_GRAFT_SPIN_REG_FLAG", 0.45)
-  private[graft] def spinMemFlag: Double =
-    Env.double("SPARK_GRAFT_SPIN_MEM_FLAG", 1.35)
+  /** Quiet-window thresholds for the two JVM spin probes, from the
+    * accumulated artifacts: spin_reg reads 0.20–0.30 s quiet (no degraded
+    * window ever moved it much — it tracks frequency caps, which this host
+    * doesn't apply); spin_mem reads ~0.95–1.3 s quiet and 1.47–2.2 s in
+    * every documented degraded window, so the flag sits in the gap. */
+  private val SpinRegFlag = 0.45
+  private val SpinMemFlag = 1.35
 
-  /** Record-gate (r14 verdict #1): an artifact-of-record cut must not
-    * embed the host's degraded mode (BENCH_r14 66.6 s, BENCH_SF1 71.4 s
-    * and the t36-1000× rows all did, and each cost the round a
-    * host-vs-engine attribution argument the probes could have settled
-    * before the run started). With SPARK_GRAFT_RECORD=1 this waits —
-    * re-probing every SPARK_GRAFT_RECORD_RETRY_SEC (default 60) up to
-    * SPARK_GRAFT_RECORD_TRIES (default 20) times — until both start
-    * probes read quiet; if the host never quiets, it proceeds (a bench
-    * that never runs is worse than a flagged one) and the artifact is
-    * diverted to a `.flagged` path by [[writeArtifact]]. Returns the
-    * final (reg, mem) readings. */
-  private def awaitQuiet(reg0: Double, mem0: Double): (Double, Double) = {
-    if (sys.env.get("SPARK_GRAFT_RECORD").isEmpty) return (reg0, mem0)
-    val retrySec = Env.int("SPARK_GRAFT_RECORD_RETRY_SEC", 60)
-    val tries = Env.int("SPARK_GRAFT_RECORD_TRIES", 20)
-    var (reg, mem) = (reg0, mem0)
-    var i = 0
-    while ((reg > spinRegFlag || mem > spinMemFlag) && i < tries) {
-      System.err.println(f"[bench] record gate: host not quiet (spin_reg $reg%.2f" +
-        f" vs $spinRegFlag, spin_mem $mem%.2f vs $spinMemFlag); retry ${i + 1}/$tries" +
-        f" in $retrySec s")
-      Thread.sleep(retrySec * 1000L)
-      reg = cpuSpinReg(); mem = cpuSpinMem(); i += 1
-    }
-    if (reg > spinRegFlag || mem > spinMemFlag)
-      System.err.println("[bench] record gate: host never quieted; proceeding " +
-        "FLAGGED (artifact will be diverted to a .flagged path)")
-    (reg, mem)
-  }
-
-  /** Write a bench artifact to its path of record — unless the run's own
-    * probes flagged it AND record mode is on, in which case the file goes
-    * to `path.flagged` so the record path only ever holds quiet cuts
-    * (r14 ADVICE: the committed "latest" sf0.1 snapshot was a degraded-
-    * window cut and anything diffing against it read host noise as an
-    * engine regression). Consumers can still check the embedded
-    * probe_quiet field on any artifact. */
+  /** Write a bench artifact to `path`, creating its parent directory.
+    * Whether the host was quiet is the artifact's own `probe_quiet`
+    * field, for any consumer to check. */
   private[graft] def writeArtifact(json: String, path: String): Unit = {
-    val flaggedRun = json.contains("\"probe_quiet\":false")
-    // A proven-quiet record is protected even OUTSIDE record mode: a casual
-    // (non-record) degraded-window run must not clobber a quiet cut at the
-    // record path — that is exactly how the r14 "latest" snapshot went bad.
-    // A flagged run may still replace a flagged/unproven one (freshness on a
-    // host whose degraded mode lasts whole days beats staleness).
-    val existingQuiet = {
-      val f = new java.io.File(path)
-      f.isFile && {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.mkString.contains("\"probe_quiet\":true") finally src.close()
-      }
-    }
-    val target =
-      if (flaggedRun && (sys.env.contains("SPARK_GRAFT_RECORD") || existingQuiet))
-        path + ".flagged"
-      else path
-    val out = new java.io.File(target)
+    val out = new java.io.File(path)
     Option(out.getParentFile).foreach(_.mkdirs())
     val w = new java.io.PrintWriter(out, "UTF-8")
     try w.println(json) finally w.close()
-    System.err.println(s"[bench] full result written to $target" +
-      (if (target != path) " (PROBE-FLAGGED — not a record cut)" else ""))
+    System.err.println(s"[bench] full result written to $path")
   }
 
   /** The two renderings of one bench run: `artifactJson` is the full-
@@ -180,13 +125,13 @@ object Bench {
     * per-query minimum and the pass count. */
   def run(spark: SparkSession, sfDir: String): BenchOutput = {
     // Ambient load BEFORE any engine work — the 1-min figure is pure
-    // co-tenant signal, the same capture pair_bench.sh records (verdict
-    // r13 #3); with it in the SCALE artifacts too, a "quiet window"
-    // claim on a BENCH_SF* re-cut is mechanical, not narrative. The
-    // end capture is self-polluted by our own 32 threads, kept for
-    // context only.
+    // co-tenant signal (verdict r13 #3); with it in the SCALE artifacts
+    // too, a "quiet window" claim on a BENCH_SF* re-cut is mechanical,
+    // not narrative. The end capture is self-polluted by our own
+    // threads, kept for context only.
     val loadStart = loadavg()
-    val (spinRegStart, spinMemStart) = awaitQuiet(cpuSpinReg(), cpuSpinMem())
+    val spinRegStart = cpuSpinReg()
+    val spinMemStart = cpuSpinMem()
     // loud (non-fatal) schema-drift diagnosis before anything runs
     graft.core.Contract.warn(spark, sfDir)
 
@@ -213,7 +158,7 @@ object Bench {
     names.foreach { n =>
       System.err.println(s"[bench] warmup $n")
       try measure(SparkEntry.queries(n)(spark, sfDir))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     // two measured passes, report the per-query minimum: the steady-state
@@ -227,7 +172,7 @@ object Bench {
       System.err.println(s"[bench] measure $name")
       val t0 = System.nanoTime()
       try measure(SparkEntry.queries(name)(spark, sfDir))
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         errors.getOrElseUpdate(name,
           // ALL control chars are illegal in a JSON string — one raw \f in
           // an error message would make the whole output line unparseable
@@ -270,14 +215,13 @@ object Bench {
     val spinMemEnd = cpuSpinMem()
     // probe_quiet covers BOTH ends of the window: a quiet start with a
     // degraded end means the tail queries were measured slow (the r14
-    // afternoon mode arrived mid-run more than once) — same max(start,
-    // end) rule pair_bench.sh applies to its python spin
+    // afternoon mode arrived mid-run more than once)
     val probeQuiet =
-      math.max(spinRegStart, spinRegEnd) <= spinRegFlag &&
-      math.max(spinMemStart, spinMemEnd) <= spinMemFlag
+      math.max(spinRegStart, spinRegEnd) <= SpinRegFlag &&
+      math.max(spinMemStart, spinMemEnd) <= SpinMemFlag
     def loadJson(l: Seq[Double]) = l.mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"measure":"noop","queries":$qs,"pass_times":$passJson,"noisy":$noisyJson,"errors":$errJson,"skipped":$skipJson,"loadavg_start":${loadJson(loadStart)},"loadavg_end":${loadJson(loadEnd)},"spin_reg_start_sec":$spinRegStart,"spin_reg_end_sec":$spinRegEnd,"spin_mem_start_sec":$spinMemStart,"spin_mem_end_sec":$spinMemEnd,"probe_quiet":$probeQuiet,"probe_flags":{"reg":$spinRegFlag,"mem":$spinMemFlag},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"measure":"noop","queries":$qs,"pass_times":$passJson,"noisy":$noisyJson,"errors":$errJson,"skipped":$skipJson,"loadavg_start":${loadJson(loadStart)},"loadavg_end":${loadJson(loadEnd)},"spin_reg_start_sec":$spinRegStart,"spin_reg_end_sec":$spinRegEnd,"spin_mem_start_sec":$spinMemStart,"spin_mem_end_sec":$spinMemEnd,"probe_quiet":$probeQuiet,"probe_flags":{"reg":$SpinRegFlag,"mem":$SpinMemFlag},"sf":"$sfDir"}"""
     val compact =
       compactLine(total, passes, results, errors, skipJson, probeQuiet, sfDir)
     BenchOutput(compact, full)
@@ -309,10 +253,11 @@ object Bench {
     // stdout: the driver's BENCH_rN.json keeps only stdout's tail, which
     // truncated the r13 per-query map (round-13 verdict #4). One file per
     // sf tag, overwritten each run, so the latest full map per scale is
-    // always diffable without reconstructing it from pairing windows.
+    // always diffable without reconstructing it from pairing windows. The
+    // default path is relative, so a run writes into its own checkout.
     val tag = new java.io.File(sfDir).getName
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      s"/root/repo/rounds/BENCH_full_latest_$tag.json")
+      s"rounds/BENCH_full_latest_$tag.json")
     try writeArtifact(out0.artifactJson, out)
     catch { case e: Exception =>
       // best-effort: a read-only checkout must not fail the bench run

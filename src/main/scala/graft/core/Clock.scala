@@ -35,14 +35,6 @@ object DecarbDate {
     (prev.atDay(1), prev.atEndOfMonth())
   }
 
-  /** Jan 1 of the "reporting year": the year of the previous month (so in
-    * January the window is all of last year — the rollover special case the
-    * reference branches on). */
-  def reportingYearWindow(clock: Clock): (LocalDate, LocalDate) = {
-    val prev = YearMonth.from(clock.today).minusMonths(1)
-    (LocalDate.of(prev.getYear, 1, 1), prev.atEndOfMonth())
-  }
-
   /** Rolling N-month window ending at the previous month (reference:
     * jobs/staging_to_app.py:1081-1085 loops the last 12 months). */
   def rollingMonths(clock: Clock, n: Int): (LocalDate, LocalDate) = {

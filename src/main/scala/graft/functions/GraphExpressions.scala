@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -87,7 +86,4 @@ object GraphExpressions {
     }
     new GenericArrayData(out)
   }
-
-  def unorderedPairs(ids: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_unordered_pairs", ids)
 }

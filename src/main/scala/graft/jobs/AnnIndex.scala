@@ -56,8 +56,7 @@ object AnnIndex {
     * strictly increasing in arrival order) to the existing centroids
     * (KMeans.assignTo — map-only, no retraining) and land it in its own
     * `ingest_batch` partition, deterministically overwriting it — the
-    * idempotent foreachBatch contract ([[graft.streaming.AnnIngestStream]]
-    * is the streaming face). Probes keep pruning to the same `cluster=`
+    * idempotent foreachBatch contract. Probes keep pruning to the same `cluster=`
     * values; each append adds one file per touched cluster, so probe I/O
     * grows by one file per increment — rebuild (compact) when the
     * increment count matters, exactly like any LSM-ish layout. Like

@@ -103,16 +103,6 @@ object ElectTargetEtl {
     ScopeTotals(cat("scope2_location"), mkt, s1, sum1n2(s1, mkt, "year"))
   }
 
-  /** Same shape from staging.renewable_setting rows written by previous
-    * runs (reference :89-97, the non-2022 branch). */
-  def baseScopeFromSetting(setting: DataFrame): ScopeTotals = {
-    def cat(c: String) = setting.filter(col("category") === c)
-      .select(col("year"), col("amount"))
-    val s1 = cat("scope1")
-    val mkt = cat("scope2_market")
-    ScopeTotals(cat("scope2_location"), mkt, s1, sum1n2(s1, mkt, "year"))
-  }
-
   /** `base_scope_cal_stage_table` (reference :102-163): the 2022 base
     * scopes recomputed from the staging layer at 2022-12-01 — electricity
     * minus renewables, × coefficient / 1000, summed over sites. Frames are

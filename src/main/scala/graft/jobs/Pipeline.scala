@@ -60,8 +60,6 @@ object Pipeline {
   final class SingleFlight(name: String = "model job") {
     private val running = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-    def isBusy: Boolean = running.get()
-
     def submit[A](work: => A): Either[String, A] =
       if (!running.compareAndSet(false, true)) Left(s"$name is busy")
       else try Right(work) finally running.set(false)

@@ -117,13 +117,6 @@ object StagingCal {
       .select(col("period_start"), col("amount"), col("ytm_amount"))
   }
 
-  /** Per-period rollup with a category label (reference `preprocess_sub_df`
-    * :249-255). */
-  def preprocessSubDf(df: DataFrame, category: String): DataFrame =
-    df.groupBy(col("period_start"))
-      .agg(sum(col("amount")).as("amount"), sum(col("ytm_amount")).as("ytm_amount"))
-      .withColumn("category", lit(category))
-
   /** Stack labeled (period_start, amount, ytm_amount) series into the
     * decarb_elec_overview long layout (reference :591-601 actual side,
     * :875-891 target side): one row family per category, typed, with

@@ -50,14 +50,6 @@ object RePurposeOptimizer {
       .groupBy(col("year"), col("site"))
       .agg(avg(col("amount")).as("carbon_coeff"))
 
-  /** raw.solar_target → (site, area, year, solar_amount) (ref :144-153). */
-  def solarAmounts(solarTarget: DataFrame, plantMapping: DataFrame): DataFrame =
-    solarTarget.join(broadcast(plantMapping.select("site", "area").distinct()),
-        Seq("site"), "left")
-      .withColumn("year", year(col("period_start")))
-      .groupBy(col("site"), col("area"), col("year"))
-      .agg(sum(col("amount")).as("solar_amount"))
-
   /** Per-site headroom: (ai − solar) · green_full_ratio/100, with the
     * reference's fills — missing solar→0, missing ratio→0, missing price→
     * max(price)+1 so unpriced sites rank last (ref :160-172). */

@@ -104,28 +104,6 @@ object Bpe {
     }
   }
 
-  /** [[mergeRound]]'s weighted twin over (syms, cnt) distinct-word rows:
-    * each word's adjacent pairs count `cnt` times — the identical global
-    * pair counts at vocabulary-sized, not corpus-sized, explode volume.
-    * Same deterministic argmax, same `None`-when-exhausted contract. */
-  def mergeRoundCounts(rows: DataFrame): Option[(DataFrame, (String, String, Long))] = {
-    val pairs = rows.select(explode(
-      graft.functions.TextExpressions.bpeSymPairs(col("syms"))).as("p"),
-      col("cnt"))
-    val bestRow = pairs.groupBy(col("p")).agg(sum(col("cnt")).as("c"))
-      .select(col("c"), element_at(split(col("p"), " "), 1).as("a"),
-        element_at(split(col("p"), " "), 2).as("b"))
-      .orderBy(col("c").desc, col("a").asc, col("b").asc)
-      .limit(1).collect()
-    bestRow.headOption.map { best =>
-      val (a, b, c) = (best.getString(1), best.getString(2), best.getLong(0))
-      val rewritten = rows.select(
-        graft.functions.TextExpressions.bpeMerge(col("syms"), a, b).as("syms"),
-        col("cnt"))
-      (rewritten, (a, b, c))
-    }
-  }
-
   /** Train `rounds` merges; returns the merge table
     * (round, lhs, rhs, merged, pair_count, n_rows_after) — lhs/rhs, not
     * left/right: SQL keywords on the oracle surface; n_rows_after is the
@@ -137,8 +115,7 @@ object Bpe {
     * hash gates prove it against the per-occurrence SQL oracle, BpeSpec
     * against the sequential reference — but every per-round pass touches
     * the distinct-word histogram instead of the exploded corpus. */
-  def train(docs: DataFrame, rounds: Int,
-            idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+  def train(docs: DataFrame, rounds: Int, textCol: String = "text"): DataFrame =
     trainFromCounts(wordCounts(docs, textCol), rounds)
 
   /** [[train]] from a (word, cnt) histogram — the entry the incremental
@@ -225,7 +202,7 @@ object Bpe {
       // collapse into a driver loop over the histogram
       val rows = cur.queryExecution.executedPlan.executeCollect()
       cur.unpersist(false)
-      return trainLocal(spark, rows, rounds, sumCnt)
+      return trainLocal(spark, rows, rounds)
     }
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, String, Long, Long)]
@@ -282,7 +259,7 @@ object Bpe {
     * the distributed loop derives from totalPairs. */
   private def trainLocal(spark: org.apache.spark.sql.SparkSession,
       rows: Array[org.apache.spark.sql.catalyst.InternalRow],
-      rounds: Int, sumCnt: Long): DataFrame = {
+      rounds: Int): DataFrame = {
     import org.apache.spark.unsafe.types.UTF8String
     val m = rows.length
     val words = new Array[String](m)
@@ -377,7 +354,7 @@ object Bpe {
     * final corpus state. */
   def encodeStats(docs: DataFrame, rounds: Int,
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val merges = train(docs, rounds, idCol, textCol)
+    val merges = train(docs, rounds, textCol)
       .orderBy(col("round")).collect()
       .map(r => (r.getString(1), r.getString(2)))
     var rows = wordSyms(docs, idCol, textCol)

@@ -685,17 +685,6 @@ object NearDup {
     unionSpans(grams.join(boiler, Seq("source", "h"), "left_semi"), L)
   }
 
-  /** Companion cut for [[boilerplateSpans]]: drop every token inside a
-    * boilerplate span, keep the rest in order — same bounded-array
-    * projection as [[stripRepeatedSpans]]. */
-  def stripBoilerplate(docs: DataFrame, minGram: Int = 5,
-                       fracNum: Int = 1, fracDen: Int = 2,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       srcCol: String = "source"): DataFrame =
-    stripWithSpans(docs,
-      boilerplateSpans(docs, minGram, fracNum, fracDen, idCol, textCol, srcCol),
-      idCol, textCol)
-
   /** Companion cut: drop every token inside a repeated span, keep the
     * rest in order. Spans per doc are bounded (≤ n_tok/2 merged
     * intervals), so the membership test is an array scan inside the

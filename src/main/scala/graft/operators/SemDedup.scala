@@ -36,9 +36,6 @@ object SemDedup {
     * disk index can never disagree. */
   val TAU = 0.3
 
-  private def cosine(dot: Column, n2a: Column, n2b: Column): Column =
-    dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
-
   /** Members frame `(vec_id, cluster, embedding, n2)` from vectors and an
     * assignment `(id, cluster)` (KMeans.lloyd / KMeans.assignTo output).
     * The squared norm is precomputed once here so pair scoring only does
@@ -101,7 +98,7 @@ object SemDedup {
     * read the SAME cluster's B_c. */
   private def scoredPairs(a: DataFrame, b: DataFrame,
                           blocksOf: Option[Column] = None,
-                          hintShuffle: Boolean = true,
+                          hintShuffle: Boolean,
                           tiles: Option[Int] = None): DataFrame = {
     // quantize each member ONCE (linear) so the O(pairs) join condition is
     // PreQuantizedDot's bare int multiply-add — QuantizedDot re-floors both
@@ -125,7 +122,7 @@ object SemDedup {
     * a_s) / (cluster, b_id, b_q, b_s) — the entry the batch forms use so
     * one materialized quantized-member frame feeds both sides. */
   private def scoredPairsQ(aq: DataFrame, bq: DataFrame,
-                           blocksOf: Option[Column] = None,
+                           blocksOf: Option[Column],
                            hintShuffle: Boolean = true,
                            tiles: Option[Int] = None): DataFrame = {
     val (ak, bk, keys) = blocksOf match {
@@ -231,7 +228,7 @@ object SemDedup {
     * the fresh batch on one side, so cost is batch-proportional. Note the
     * direction matters BOTH ways: a new low-id vector can shadow an OLD
     * member, flipping the old member's removed status — which the (min,
-    * sum) merge in [[mergeRemovals]] absorbs exactly. */
+    * sum) merge in [[foldRemovals]] absorbs exactly. */
   def incrementalShadowPairs(stored: DataFrame, fresh: DataFrame): DataFrame =
     scoredPairs(aSide(stored.unionByName(fresh)), bSide(fresh),
         hintShuffle = false)
@@ -252,8 +249,4 @@ object SemDedup {
     stacked.groupBy(col("removed_id"), col("cluster"))
       .agg(min(col("kept_by")).as("kept_by"),
         sum(col("n_shadows")).as("n_shadows"))
-
-  /** Two-table convenience form of [[foldRemovals]]. */
-  def mergeRemovals(a: DataFrame, b: DataFrame): DataFrame =
-    foldRemovals(a.unionByName(b))
 }

@@ -40,7 +40,7 @@ object VectorQueries {
     * pairing/aggregation primitives live in [[graft.operators.SemDedup]],
     * shared with the frozen-centroid form (s13) and the incremental disk
     * index ([[graft.jobs.SemDeDupIndex]]). */
-  private[queries] def semDedup(s: SparkSession, e: DataFrame, k: Int): DataFrame = {
+  private[queries] def semDedup(e: DataFrame, k: Int): DataFrame = {
     val (assign0, _) = graft.operators.KMeans.lloyd(
       e, "vec_id", "embedding", k = k, iters = 2)
     // materialize the assignment ONCE: both the size histogram and the
@@ -52,9 +52,6 @@ object VectorQueries {
     val sd = graft.operators.SemDedup
     val sizes = clusterSizes(assign)
     val blocks = blocksBySize(sizes)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      System.err.println(s"[semdedup] cluster sizes ${sizes.sortBy(-_._2)}" +
-        s" -> blocks ${blocks.toSeq.sortBy(_._1)}")
     sd.removals(sd.shadowPairsSized(sd.members(e, assign), blocks,
       spreadTiles = spreadTiles(sizes)))
   }
@@ -580,7 +577,7 @@ object VectorQueries {
     // is map-only against broadcast centroids, and the pair join shuffles
     // on cluster id — never a global all-pairs. ----
     Q("s11_semdedup",
-      (s, dir) => semDedup(s, T(s, dir, "embeddings"), k = 8),
+      (s, dir) => semDedup(T(s, dir, "embeddings"), k = 8),
       Some(semDedupUnrolledSql(trainPred = None)),
       bench = true),
 
@@ -601,7 +598,7 @@ object VectorQueries {
       (s, dir) => {
         val e = T(s, dir, "embeddings")
         val k = math.max(8L, e.count() / 2500L).toInt
-        semDedup(s, e, k)
+        semDedup(e, k)
       },
       Some(semDedupUnrolledSql(trainPred = None,
         kSql = "SELECT greatest(8, CAST(floor(count(*)/2500.0) AS BIGINT))" +

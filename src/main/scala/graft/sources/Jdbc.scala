@@ -71,21 +71,6 @@ object Jdbc {
     props.foldLeft(r) { case (acc, (k, v)) => acc.option(k, v) }.load()
   }
 
-  /** Range-partitioned parallel scan for big tables. */
-  def readPartitioned(spark: SparkSession, url: String, table: String,
-                      partitionColumn: String, lower: Long, upper: Long,
-                      numPartitions: Int): DataFrame = {
-    ensureDialects()
-    spark.read.format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .option("partitionColumn", partitionColumn)
-      .option("lowerBound", lower)
-      .option("upperBound", upper)
-      .option("numPartitions", numPartitions)
-      .load()
-  }
-
   /** Chunked append — the reference's `to_sql(chunksize=10000)`
     * (reference: jobs/raw_to_staging.py:204-205). */
   def append(df: DataFrame, url: String, table: String,

@@ -3,20 +3,10 @@ package graft
 import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins [[Bench.writeArtifact]]'s record-protection contract (no Spark
-  * session needed — pure file logic):
-  *
-  *   - a quiet cut always lands at the record path;
-  *   - a probe-flagged cut is diverted to `.flagged` when the record path
-  *     already holds a proven-quiet artifact, even WITHOUT record mode —
-  *     the r15 hole: a casual degraded-window `graft.Bench` run clobbered
-  *     the quiet `rounds/BENCH_full_latest_sf0.1.json` because the divert
-  *     only fired under SPARK_GRAFT_RECORD=1;
-  *   - a flagged cut may still replace a flagged/unproven one (freshness
-  *     on a host whose degraded mode lasts whole days beats staleness).
-  *
-  * Record MODE (the env-gated wait-for-quiet path) is exercised by the
-  * rebuild scripts; this spec covers the always-on file-level guard.
+/** Pins [[Bench.writeArtifact]] as a plain write (no Spark session
+  * needed): a cut lands at the path it is given whatever its probes read,
+  * and replaces what was there. Host quietness travels inside the artifact
+  * as its `probe_quiet` field, never as a different file name.
   */
 class BenchArtifactSpec extends AnyFunSuite {
 
@@ -39,18 +29,6 @@ class BenchArtifactSpec extends AnyFunSuite {
       Bench.writeArtifact(quietJson, p)
       assert(read(d.resolve("BENCH.json")) == quietJson)
       assert(!Files.exists(d.resolve("BENCH.json.flagged")))
-    }
-  }
-
-  test("flagged cut cannot clobber a proven-quiet record, even without record mode") {
-    withDir { d =>
-      val p = d.resolve("BENCH.json").toString
-      Bench.writeArtifact(quietJson, p)
-      Bench.writeArtifact(flaggedJson, p)
-      assert(read(d.resolve("BENCH.json")) == quietJson,
-        "quiet record must survive a flagged overwrite attempt")
-      assert(read(d.resolve("BENCH.json.flagged")) == flaggedJson,
-        "flagged cut must still be preserved at the .flagged path")
     }
   }
 

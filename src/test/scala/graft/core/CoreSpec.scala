@@ -12,8 +12,6 @@ class CoreSpec extends SparkSpec {
     val jan = FixedClock(LocalDate.of(2026, 1, 15))
     assert(DecarbDate.previousMonthWindow(jan) ==
       (LocalDate.of(2025, 12, 1), LocalDate.of(2025, 12, 31)))
-    assert(DecarbDate.reportingYearWindow(jan) ==
-      (LocalDate.of(2025, 1, 1), LocalDate.of(2025, 12, 31)))
     val mid = FixedClock(LocalDate.of(2026, 8, 12))
     assert(DecarbDate.previousMonthWindow(mid) ==
       (LocalDate.of(2026, 7, 1), LocalDate.of(2026, 7, 31)))

@@ -34,4 +34,24 @@ class EnvSpec extends AnyFunSuite {
     rejects("SPARK_GRAFT_SPIN_MEM_FLAG")(
       Env.double("SPARK_GRAFT_SPIN_MEM_FLAG", 1.35, Map("SPARK_GRAFT_SPIN_MEM_FLAG" -> "12x")))
   }
+
+  test("the SPARK_GRAFT_* knobs src/main reads are exactly README's table") {
+    val root = new java.io.File("src/main/scala")
+    val readme = new java.io.File("README.md")
+    assert(root.isDirectory && readme.isFile,
+      s"run from the repository root, not ${new java.io.File(".").getAbsolutePath}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    def read(f: java.io.File) =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val knob = "SPARK_GRAFT_[A-Z0-9_]+".r
+    val inCode = files(root).flatMap(f => knob.findAllIn(read(f))).toSet
+    val row = "^\\| `(SPARK_GRAFT_[A-Z0-9_]+)` \\|".r.unanchored
+    val inTable = read(readme).linesIterator
+      .collect { case row(name) => name }.toSet
+    assert(inCode.nonEmpty)
+    assert(inCode == inTable,
+      s"in code only: ${inCode -- inTable}; in README only: ${inTable -- inCode}")
+  }
 }

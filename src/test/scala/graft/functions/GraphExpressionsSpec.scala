@@ -8,7 +8,7 @@ class GraphExpressionsSpec extends SparkSpec {
   test("unordered_pairs emits every pair min-first regardless of input order") {
     import spark.implicits._
     val got = Seq(Seq(3L, 1L, 2L)).toDF("ids")
-      .select(explode(GraphExpressions.unorderedPairs(col("ids"))).as("e"))
+      .select(explode(call_function("graft_unordered_pairs", col("ids"))).as("e"))
       .select(col("e.a"), col("e.b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 2L), (1L, 3L), (2L, 3L)))
@@ -17,7 +17,7 @@ class GraphExpressionsSpec extends SparkSpec {
   test("unordered_pairs of empty and singleton arrays explode to zero rows") {
     import spark.implicits._
     val got = Seq(Seq.empty[Long], Seq(7L)).toDF("ids")
-      .select(explode(GraphExpressions.unorderedPairs(col("ids"))))
+      .select(explode(call_function("graft_unordered_pairs", col("ids"))))
     assert(got.count() == 0L)
   }
 

@@ -74,7 +74,6 @@ class NearestCentroidSpec extends SparkSpec {
   }
 
   test("pruned path: duplicate centroids tie to the lower id; dim-mismatch rows fall back") {
-    val dim = 4
     val base = Array.tabulate(150)(j =>
       Array(j.toLong * 10, (j % 7).toLong, -j.toLong, 3L))
     // centroid 149 duplicates centroid 3 exactly — id 3 must win for a

@@ -32,7 +32,7 @@ class TimeExpressionsSpec extends SparkSpec {
 
   test("asofPickSorted equals the HOF formulation on random sorted arrays") {
     val rnd = new scala.util.Random(17)
-    val rows = Seq.tabulate(300) { i =>
+    val rows = Seq.fill(300) {
       val n = rnd.nextInt(6)
       val ts = Seq.fill(n)(rnd.nextInt(40).toLong).sorted
       (rnd.nextInt(40).toLong, ts.zipWithIndex.map { case (t, j) => (t, s"p$j") })

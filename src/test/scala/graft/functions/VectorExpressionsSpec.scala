@@ -40,7 +40,6 @@ class VectorExpressionsSpec extends SparkSpec {
     // the expression inside a UDF-less local relation still goes through
     // codegen, so call eval directly instead
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.ArrayData
     val lit1 = Literal.create(Array(1.0f, 2.0f),
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
     val dot = VectorExpressions.QuantizedDot(lit1, lit1)

@@ -1,7 +1,6 @@
 package graft.jobs
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class MaintenanceSpec extends SparkSpec {
   import spark.implicits._

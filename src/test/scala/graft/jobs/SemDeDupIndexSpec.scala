@@ -185,7 +185,6 @@ class SemDeDupIndexSpec extends SparkSpec {
     // from actual runtime sizes, so the tiny side broadcasts regardless
     // of static estimates; the pin asserts no sort-merge or shuffled-hash
     // join survives anywhere in the final plan.
-    import spark.implicits._
     val rows = (0L until 3000L)
       .map(i => (i, vec((i % 3).toInt, 0.001f * (i % 7))))
     val (_, cents) = KMeans.lloyd(df(rows), "vec_id", "embedding", 3, 2)

@@ -31,7 +31,6 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("IVF 2-probe recall@3 dominates 1-probe; k-means-trained index beats the raw label index") {
-    import org.apache.spark.sql.functions._
     val truth = topK("s01_knn_brute", 3)
     val r1 = recallAgainstTruth(topK("s02_knn_ivf_label", 3), truth)
     val r2 = recallAgainstTruth(topK("s05_knn_ivf_multiprobe", 3), truth)

@@ -225,13 +225,6 @@ class NearDupSpec extends SparkSpec {
     // straddling grams (header tail + per-doc unique token) have df 1 and
     // must NOT extend the span past the header
     assert(spans == Set((1L, 0L, 0L, 6L), (2L, 0L, 0L, 6L), (3L, 0L, 0L, 6L)))
-
-    val cleaned = NearDup.stripBoilerplate(docs, minGram = 5)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(cleaned(1L) == "u1 v1 w1 x1 y1")
-    assert(cleaned(4L) == "clean words only nothing shared at all")
-    assert(cleaned(5L) == "tiny doc")
-    assert(cleaned(11L) == s"$hdr m1 m2 m3 m4 m5") // B is untouched
   }
 
   /** plain-Scala reference for [[NearDup.crossMinHashPairs]]: same word

@@ -146,30 +146,4 @@ class SourcesSpec extends SparkSpec {
     val got = df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
     assert(got.toSeq == Seq(("1", "", "3")))
   }
-
-  test("Quarantine routes malformed JSON rows without aborting the load") {
-    import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("quar").toString
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "feed.json"),
-      """{"site": "WZS-1", "amount": 10.5}
-        |{"site": "WKS", "amount": "not-a-number"}
-        |{"site": "WZS-6", "amount": 3.25}
-        |this is not json at all
-        |{"site": "WZS-8"}
-        |""".stripMargin)
-    val schema = StructType(Seq(
-      StructField("site", StringType), StructField("amount", DoubleType)))
-    val (clean, bad) = Quarantine.ingestJson(spark, dir, schema)
-    // the type-violating row and the unparseable row quarantine; the
-    // missing-field row is legal JSON against a nullable schema
-    val cleanRows = clean.orderBy("site").collect()
-      .map(r => (r.getString(0), Option(r.get(1)))).toSeq
-    assert(cleanRows == Seq(
-      ("WZS-1", Some(10.5)), ("WZS-6", Some(3.25)), ("WZS-8", None)))
-    val badRaw = bad.collect().map(_.getString(0)).toSeq
-    assert(badRaw.size == 2)
-    assert(badRaw.exists(_.contains("not-a-number")))
-    assert(badRaw.exists(_.contains("not json at all")))
-  }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Streaming LSH near-dup must (1) match the batch t07 pair set exactly
   * when state is uncapped, (2) be arrival-order-free, (3) keep flagging

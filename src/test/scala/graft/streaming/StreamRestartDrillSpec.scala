@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.SparkSpec
-import graft.jobs.{AnnIndex, CrashFileSystem, CrashFsBudget, SemDeDupIndex}
+import graft.jobs.{CrashFileSystem, CrashFsBudget, SemDeDupIndex}
 import org.apache.spark.sql.DataFrame
 
 /** Streaming restart drill (r14 verdict ask: make "replay-before-compact
@@ -18,10 +18,9 @@ import org.apache.spark.sql.DataFrame
   * the operator runbook run (clear the dead append's lease, compact) —
   * the replay-before-compact order the LsmCompact contract requires, here
   * arising naturally from "restart the stream, then do maintenance".
-  * Drilled on BOTH index-feeding stream families (SemDedupStream →
-  * SemDeDupIndex, whose removals DELTAS are the aggregate state the r14
-  * compact-first double-ingest permanently corrupted, and AnnIngestStream
-  * → AnnIndex, whose vectors are key-deduped state). Digest (index
+  * Drilled on SemDedupStream → SemDeDupIndex, whose removals DELTAS are
+  * the aggregate state the r14 compact-first double-ingest permanently
+  * corrupted. Digest (index
   * content, partition layout ignored: the removals algebra is
   * microbatch-slicing-independent, and a replayed wider batch 0 after an
   * offsets-log-less crash is legal slicing) must equal an uninterrupted
@@ -84,16 +83,6 @@ class StreamRestartDrillSpec extends SparkSpec {
     digest = p => sortedRows(SemDeDupIndex.removals(spark, p)) ++
       sortedRows(spark.read.parquet(s"$p/members").drop("ingest_batch")))
 
-  private val annDrill = StreamDrill(
-    name = "ann",
-    build = p => { AnnIndex.build(df(built).select("vec_id", "embedding"),
-      "vec_id", "embedding", k = 3, iters = 2, p); () },
-    start = (dir, p, ck) => AnnIngestStream.ingest(spark, dir.toString, p, ck),
-    leaseRoot = "vectors",
-    compact = p => { AnnIndex.compact(spark, p); () },
-    digest = p => sortedRows(
-      spark.read.parquet(s"$p/vectors").drop("ingest_batch")))
-
   /** Drive the ingest: start the stream, drain each arrival file in its
     * own processAllAvailable window. Any step may die on an injected
     * crash — the first failure aborts the drive (the stream is dead) and
@@ -125,7 +114,7 @@ class StreamRestartDrillSpec extends SparkSpec {
     val rnd = new scala.util.Random(15)
     var kills = 0
     var attempts = 0
-    for (d <- Seq(semDrill, annDrill)) {
+    for (d <- Seq(semDrill)) {
       // uninterrupted reference (plain local path; logical digests make
       // the filesystem scheme irrelevant)
       val refIdx = Files.createTempDirectory(s"restart_ref_${d.name}").toString
