@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Idempotent keyed-overwrite writers — the engine-side port of the
   * reference's delete-then-append refresh (S7): every monthly job deletes the
@@ -61,13 +62,14 @@ object Sink {
     * unioning the replacement. This is the general fallback the JDBC sink
     * would implement transactionally; on files it is a partition-scoped
     * read-modify-write (still bounded by the touched partitions, never the
-    * whole table). */
-  def overwriteWhere(df: DataFrame, path: String, partitionCols: Seq[String],
-                     matches: Column): Unit = {
+    * whole table). The existing table is read with its declared `schema`,
+    * so the read starts no schema-inference job. */
+  def overwriteWhere(df: DataFrame, path: String, schema: StructType,
+                     partitionCols: Seq[String], matches: Column): Unit = {
     val spark = df.sparkSession
     // first-ever write: nothing to delete, plain partition overwrite
     val existing =
-      try spark.read.parquet(path)
+      try spark.read.schema(schema).parquet(path)
       catch {
         case e: org.apache.spark.sql.AnalysisException if pathMissing(e) =>
           overwritePartitions(df, path, partitionCols)

@@ -1,7 +1,7 @@
 package graft.jobs
 
 import java.sql.{Date => SqlDate}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Clock, DecarbDate, Sink}
 
@@ -25,15 +25,19 @@ object MainDag {
   private val renewCats = Seq("綠電電量", "購買綠證電量", "自建自用電量")
 
   def jobs(base: String, clock: Clock): Seq[Pipeline.Job] = {
-    def path(layer: String, table: String) = s"$base/$layer/$table"
     def rd(s: SparkSession, layer: String, table: String): DataFrame =
-      s.read.parquet(path(layer, table))
+      Warehouse.read(s, base, layer, table)
     def wr(df: DataFrame, layer: String, table: String): Unit =
-      Sink.overwritePartitions(df, path(layer, table), Seq("period_start"))
+      Sink.overwritePartitions(df, Warehouse.path(base, layer, table),
+        Seq("period_start"))
+    def wrWhere(df: DataFrame, layer: String, table: String,
+                partitionCols: Seq[String], matches: Column): Unit =
+      Sink.overwriteWhere(df, Warehouse.path(base, layer, table),
+        Warehouse.schema(layer, table), partitionCols, matches)
     /** a source that owns one `type` slice of a shared raw table */
     def wrSlice(df: DataFrame, layer: String, table: String, typ: String): Unit =
-      Sink.overwriteWhere(df.withColumn("type", lit(typ)),
-        path(layer, table), Seq("period_start"), col("type") === typ)
+      wrWhere(df.withColumn("type", lit(typ)), layer, table, Seq("period_start"),
+        col("type") === typ)
 
     val month = DecarbDate.previousMonthWindow(clock)._1
     val monthDate = SqlDate.valueOf(month)
@@ -118,8 +122,7 @@ object MainDag {
               col("period_start") === lit(prev)),
             monthDate)
         }.reduce(_ unionByName _)
-        Sink.overwriteWhere(fixed, path("raw", "renewable_energy_decarb"),
-          Seq("period_start"),
+        wrWhere(fixed, "raw", "renewable_energy_decarb", Seq("period_start"),
           col("period_start") === lit(monthDate) &&
             col("category2").isin("光伏", "綠電", "綠證"))
       }),
@@ -129,8 +132,8 @@ object MainDag {
         val fixed = FixData.fixRaw(
           raw.filter(col("period_start") === lit(monthDate)),
           raw.filter(col("period_start") === lit(prev)), monthDate)
-        Sink.overwriteWhere(fixed, path("raw", "electricity_total_decarb"),
-          Seq("period_start"), col("period_start") === lit(monthDate))
+        wrWhere(fixed, "raw", "electricity_total_decarb", Seq("period_start"),
+          col("period_start") === lit(monthDate))
       }),
 
       // ---- raw → staging, twelve tables (main.py:64-81) ----
@@ -239,15 +242,9 @@ object MainDag {
             .drop("last_update_time").localCheckpoint() // materialize before self-overwrite
           catch {
             case e: org.apache.spark.sql.AnalysisException if Sink.pathMissing(e) =>
-              import org.apache.spark.sql.types._
-              s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                StructType(Seq(
-                  StructField("provider_name", StringType),
-                  StructField("contract_ytm_amount", DoubleType),
-                  StructField("year", IntegerType),
-                  StructField("area", StringType),
-                  StructField("green_elec_type", ArrayType(StringType)),
-                  StructField("contract_price", DoubleType))))
+              s.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+                Warehouse.schema("app", "green_elec_pre_contracts"))
+                .drop("last_update_time")
           }
         val refreshed = StagingCal.greenElecPreContracts(
           rd(s, "staging", "green_elect_vol"), rd(s, "raw", "area_mapping"),
@@ -257,8 +254,7 @@ object MainDag {
         if (keys.nonEmpty) {
           val years = keys.map(_.get(0)).distinct.toSeq
           val provs = keys.map(_.get(1)).distinct.toSeq
-          Sink.overwriteWhere(refreshed,
-            path("app", "green_elec_pre_contracts"), Seq("year"),
+          wrWhere(refreshed, "app", "green_elec_pre_contracts", Seq("year"),
             col("year").isin(years: _*) &&
               col("provider_name").isin(provs: _*) &&
               forall(col("green_elec_type"), e => e === lit("光電")))
@@ -311,10 +307,10 @@ object MainDag {
           rd(s, "app", "green_energy_customer"),
           rd(s, "raw", "green_purchase"),
           rd(s, "raw", "area_mapping"), qw)
-        Sink.overwriteWhere(
+        wrWhere(
           out.withColumn("period_start", make_date(col("year"),
             lit(qw.quarterNum * 3), lit(1))),
-          path("app", "green_energy_overview"), Seq("period_start"),
+          "app", "green_energy_overview", Seq("period_start"),
           col("year") === qw.year && col("quarter") === qw.quarter)
       }),
 

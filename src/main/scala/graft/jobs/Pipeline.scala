@@ -1,5 +1,6 @@
 package graft.jobs
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** The reference's batch-DAG contract (reference: main.py:29-125): an ordered
@@ -35,7 +36,9 @@ object Pipeline {
   final case class Job(name: String, run: SparkSession => Unit)
 
   /** Run jobs in order; failures are isolated per job (the reference's error
-    * model: errors do not halt the DAG). Returns the names of failed jobs. */
+    * model: errors do not halt the DAG). Returns the names of failed jobs.
+    * A fatal error (out of memory, an interrupt) is not a job's failure: it
+    * ends the run, since the JVM left behind cannot be trusted. */
   def run(spark: SparkSession, jobs: Seq[Job],
           notifier: Notifier = LogNotifier): Seq[String] =
     jobs.flatMap { job =>
@@ -44,7 +47,7 @@ object Pipeline {
         notifier.success(job.name)
         None
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           notifier.failure(job.name, e)
           Some(job.name)
       }
@@ -56,12 +59,20 @@ object Pipeline {
     * while one is running is REJECTED, not queued. `submit` returns
     * Left("busy") immediately in that case; the caller (the reference's
     * HTTP layer) surfaces it to the user. Thread-safe; the permit is
-    * released on success AND failure. */
+    * released on success AND failure.
+    *
+    * Work that ends on another thread (an async task) takes the permit
+    * with `acquire` and hands the release to whatever runs last. */
   final class SingleFlight(name: String = "model job") {
     private val running = new java.util.concurrent.atomic.AtomicBoolean(false)
 
+    /** Take the permit, or Left("busy"); the caller must run the returned
+      * release exactly once, when its work ends. */
+    def acquire(): Either[String, () => Unit] =
+      if (running.compareAndSet(false, true)) Right(() => running.set(false))
+      else Left(s"$name is busy")
+
     def submit[A](work: => A): Either[String, A] =
-      if (!running.compareAndSet(false, true)) Left(s"$name is busy")
-      else try Right(work) finally running.set(false)
+      acquire().map(release => try work finally release())
   }
 }

@@ -5,6 +5,8 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.util.control.NonFatal
+import graft.jobs.Pipeline
 
 /** The reference's HTTP entry points (SURVEY.md §3.2/§3.3) as a thin layer
   * over the engine seams — JDK `HttpServer`, zero added dependencies, no
@@ -14,7 +16,8 @@ import java.util.concurrent.atomic.AtomicInteger
   * Routes (reference files):
   *  - `POST /sign_off/establish`          → async §3.2 chain: simulate →
   *    create sign-off → notify; returns `{"id","state"}` immediately
-  *    (app/sign_off/blueprint.py:184-224, utils/response.py:4-7)
+  *    (app/sign_off/blueprint.py:184-224, utils/response.py:4-7), or 429
+  *    while an earlier chain is still running
   *  - `POST /sign_off/notification-reviewer` → async notify + status flip
   *    (app/sign_off/blueprint.py:124-180)
   *  - `GET  /tasks/{task_id}`             → poll; unknown id = PENDING
@@ -141,6 +144,10 @@ final class Api(runner: TaskRunner, hooks: Api.Hooks,
                 taskFailMail: (String, String, String) => Unit = (_, _, _) => ()) {
   import Api._
 
+  /** One establish chain in flight at a time, from the request until its
+    * task ends: a second request while one runs is rejected with 429, not
+    * queued (reference: utils/indicator_queue.py:5-17). */
+  private val establishing = new Pipeline.SingleFlight("sign-off establish")
   private var server: HttpServer = _
   private var handlers: ExecutorService = _
 
@@ -186,13 +193,20 @@ final class Api(runner: TaskRunner, hooks: Api.Hooks,
         val pic = field(body, "pic").getOrElse("")
         val reviewer = field(body, "reviewer").getOrElse("")
         val name = routeNames("/sign_off/establish")
-        val id = runner.submit(name,
-          onError = (tid, e) => taskFailMail(
-            "sign_off establish, simulate() | create_sign_off() | send_pic_mail()",
-            tid, String.valueOf(e.getMessage))) {
-          hooks.establish(pic, reviewer)
+        establishing.acquire() match {
+          case Left(busy) =>
+            respond(ex, 429, s"""{"error":${jstr(busy)}}""")
+          case Right(release) =>
+            val id =
+              try runner.submit(name,
+                onError = (tid, e) => taskFailMail(
+                  "sign_off establish, simulate() | create_sign_off() | send_pic_mail()",
+                  tid, String.valueOf(e.getMessage))) {
+                try hooks.establish(pic, reviewer) finally release()
+              }
+              catch { case NonFatal(e) => release(); throw e }
+            respond(ex, 200, taskResponse(id, runner.state(id)))
         }
-        respond(ex, 200, taskResponse(id, runner.state(id)))
 
       case ("POST", "/sign_off/notification-reviewer") =>
         val signId = field(body, "sign_id").getOrElse("")
@@ -254,7 +268,7 @@ final class Api(runner: TaskRunner, hooks: Api.Hooks,
         // synchronous mini-DAG), so the response carries the outcome
         try respond(ex, 200, s"""{"msg":${jstr(hooks.solarRefresh())}}""")
         catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             respond(ex, 500, s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
         }
 
@@ -262,7 +276,7 @@ final class Api(runner: TaskRunner, hooks: Api.Hooks,
         respond(ex, 404, """{"error":"not found"}""")
     }
   } catch {
-    case e: Throwable =>
+    case NonFatal(e) =>
       respond(ex, 500, s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
   }
 }

@@ -1,6 +1,7 @@
 package graft.service
 
 import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
+import scala.util.control.NonFatal
 
 /** The async-task backbone behind the reference's HTTP layer — Celery's
   * submit / state-store / poll contract (reference: app/celery.py:7-31,
@@ -53,7 +54,9 @@ final class TaskRunner(threads: Int = 2, maxRecords: Int = 10000) {
 
   /** Submit named work; returns the task id immediately (the `.delay()`
     * contract). `work` returns the task's result string (what the
-    * reference stores in celery_taskmeta.result). */
+    * reference stores in celery_taskmeta.result). A non-fatal exception
+    * is the task's FAILURE; a fatal one (out of memory, an interrupt) is
+    * not caught and ends the pool thread. */
   def submit(name: String, onError: (String, Throwable) => Unit = (_, _) => ())
             (work: => String): String = {
     val id = java.util.UUID.randomUUID().toString
@@ -65,10 +68,10 @@ final class TaskRunner(threads: Int = 2, maxRecords: Int = 10000) {
         val r = work
         metas.put(id, Meta(id, name, "SUCCESS", Some(r), None, seq))
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           metas.put(id, Meta(id, name, "FAILURE", None,
             Some(String.valueOf(e.getMessage)), seq))
-          try onError(id, e) catch { case _: Throwable => () }
+          try onError(id, e) catch { case NonFatal(_) => () }
       }
       evictIfNeeded()
     }

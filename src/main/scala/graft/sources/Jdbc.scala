@@ -152,13 +152,13 @@ object Jdbc {
     try {
       conn.setAutoCommit(false)
       val st = conn.createStatement()
+      var committed = false
       try {
         st.executeUpdate(s"DELETE FROM $table WHERE $deleteWhere")
         st.executeUpdate(s"INSERT INTO $table ($cols) SELECT $cols FROM $stage")
         conn.commit()
-      } catch {
-        case e: Throwable => conn.rollback(); throw e
-      }
+        committed = true
+      } finally if (!committed) conn.rollback()
     } finally {
       // best-effort stage cleanup; a leftover stage table is inert and
       // overwritten by the next refresh

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.time.LocalDate
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 class CoreSpec extends SparkSpec {
   import spark.implicits._
@@ -79,7 +80,9 @@ class CoreSpec extends SparkSpec {
       .toDF("period", "site", "amount")
     Sink.overwritePartitions(v1, dir, Seq("period"))
     val fix = Seq(("2026-01", "x", 99.0)).toDF("period", "site", "amount")
-    Sink.overwriteWhere(fix, dir, Seq("period"), col("site") === "x")
+    Sink.overwriteWhere(fix, dir,
+      StructType.fromDDL("site STRING, amount DOUBLE, period STRING"),
+      Seq("period"), col("site") === "x")
     val got = Sink.read(spark, dir).select("period", "site", "amount")
       .as[(String, String, Double)].collect().toSet
     assert(got == Set(("2026-01", "a", 1.0), ("2026-01", "x", 99.0),

@@ -19,22 +19,6 @@ class EnvSpec extends AnyFunSuite {
       Env.int("SPARK_GRAFT_SEMDEDUP_TILES", 256, Map("SPARK_GRAFT_SEMDEDUP_TILES" -> "12x")))
   }
 
-  test("long: default, value past Int range, malformed value names the knob") {
-    assert(Env.long("SPARK_GRAFT_SIG_CKPT_CAP", 200000L, Map.empty) == 200000L)
-    assert(Env.long("SPARK_GRAFT_SIG_CKPT_CAP", 200000L,
-      Map("SPARK_GRAFT_SIG_CKPT_CAP" -> "5000000000")) == 5000000000L)
-    rejects("SPARK_GRAFT_SIG_CKPT_CAP")(
-      Env.long("SPARK_GRAFT_SIG_CKPT_CAP", 200000L, Map("SPARK_GRAFT_SIG_CKPT_CAP" -> "12x")))
-  }
-
-  test("double: default, value, malformed value names the knob") {
-    assert(Env.double("SPARK_GRAFT_SPIN_MEM_FLAG", 1.35, Map.empty) == 1.35)
-    assert(Env.double("SPARK_GRAFT_SPIN_MEM_FLAG", 1.35,
-      Map("SPARK_GRAFT_SPIN_MEM_FLAG" -> "2.5")) == 2.5)
-    rejects("SPARK_GRAFT_SPIN_MEM_FLAG")(
-      Env.double("SPARK_GRAFT_SPIN_MEM_FLAG", 1.35, Map("SPARK_GRAFT_SPIN_MEM_FLAG" -> "12x")))
-  }
-
   test("the SPARK_GRAFT_* knobs src/main reads are exactly README's table") {
     val root = new java.io.File("src/main/scala")
     val readme = new java.io.File("README.md")

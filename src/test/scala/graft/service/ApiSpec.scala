@@ -185,6 +185,39 @@ class ApiSpec extends SparkSpec {
     } finally { api.stop(); runner.shutdown() }
   }
 
+  test("establish is single-flight: a second request while one runs is rejected") {
+    val runner = new TaskRunner()
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    val api = new Api(runner, Api.Hooks(
+      establish = (pic, _) => {
+        runs.incrementAndGet()
+        if (pic == "first") { started.countDown(); gate.await() }
+        s"established $pic"
+      },
+      notifyReviewer = (_, _, _, _) => "", solarRefresh = () => ""))
+    val port = api.start()
+    try {
+      val (c1, r1) = post(port, "/sign_off/establish",
+        """{"pic": "first", "reviewer": "r"}""")
+      assert(c1 == 200)
+      assert(started.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      // the first chain is still running: the second is refused, not queued
+      val (c2, r2) = post(port, "/sign_off/establish",
+        """{"pic": "second", "reviewer": "r"}""")
+      assert(c2 == 429 && Api.field(r2, "error").contains("sign-off establish is busy"), r2)
+      gate.countDown()
+      assert(pollTerminal(port, Api.field(r1, "id").get) == "SUCCESS")
+      // the permit came back when the first task ended
+      val (c3, r3) = post(port, "/sign_off/establish",
+        """{"pic": "third", "reviewer": "r"}""")
+      assert(c3 == 200)
+      assert(pollTerminal(port, Api.field(r3, "id").get) == "SUCCESS")
+      assert(runs.get == 2)
+    } finally { gate.countDown(); api.stop(); runner.shutdown() }
+  }
+
   test("stop() ends every request-handler thread") {
     val runner = new TaskRunner()
     val api = new Api(runner, Api.Hooks(
