@@ -4,12 +4,22 @@
 # +21% co-tenant-inflated with no pairing of record, and the honest ratio
 # had to be re-measured by the judge).
 #
-# Methodology (PERF.md): run graft.Bench and scripts/bench_duckdb.py
-# BACK-TO-BACK in one window, warm shared DuckDB connection, min-of-2 per
-# query on both sides, totals over the intersection of query names that
-# completed on both engines. Co-tenant load inflates both sides equally in
-# one window, so the RATIO is the number of record; raw totals are kept for
-# context only.
+# Methodology (PERF.md): run the repo benchmark's full-set workload
+# (`perfbench/run.py --workload query_suite --trace 1`) and
+# scripts/bench_duckdb.py BACK-TO-BACK in one window. Each side times the
+# full result, min-of-2 per query: the engine's time is the minimum over
+# the untraced warm passes 1 and 3 of the traced run, DuckDB's the minimum
+# of its two passes on one warm shared connection. Totals are over the
+# intersection of query names that completed on both engines; an engine
+# op with an error leaves its query out. Co-tenant load inflates both
+# sides equally in one window, so the RATIO is the number of record; raw
+# totals are kept for context only.
+#
+# Each window records the engine run's host probes as the harness took
+# them (`spin_*` and `loadavg_*` at the start and the end of the run) and
+# whether its outputs matched their pins (`correct`). The pins are
+# sf0.1's, so a SF_DIR other than sf0.1 always reports `correct: false`;
+# its ratio still stands.
 #
 # Usage: scripts/pair_bench.sh [SF_DIR] [OUT_JSON]
 #   SF_DIR   parquet dir (default /root/testdata/sf0.1)
@@ -34,13 +44,27 @@ scripts/run_verify.sh /root/testdata/sf0.001 "$ORACLE_DIR" graft.Verify \
   q01_groupby_sum >/dev/null 2>&1
 
 echo "[pair] engine bench on $SF ..." >&2
-# The engine leg's full per-query map lands in THIS window's artifact —
-# a pairing run must not also overwrite the rounds/BENCH_full_latest
-# snapshot as a side effect (r15: two degraded pair windows clobbered the
-# snapshot that way)
-ENGINE_JSON=$(SPARK_GRAFT_SF_DIR="$SF" \
-  SPARK_GRAFT_BENCH_OUT=$(mktemp /tmp/pair_engine.XXXX.json) \
-  scripts/run_verify.sh x x graft.Bench 2>/dev/null | tail -1)
+# run.py's last stdout line is {correct, attempted, failed, metrics}; its
+# full artifact (per-op times, host probes) is rewritten by every run of
+# the same workload, seed and trace, so it is read right away
+ENGINE_LINE=$(python3 perfbench/run.py --workload query_suite --data "$SF" \
+  --seed 1 --seconds 20 --trace 1 | tail -1)
+ENGINE_JSON=$(python3 - .bench_build/artifacts/query_suite-seed1-trace1.json \
+  "$ENGINE_LINE" <<'EOF'
+import json, sys
+art, line = json.load(open(sys.argv[1])), json.loads(sys.argv[2])
+ms = {}
+for o in art["ops"]:
+    if o["pass"] in (1, 3) and not o["traced"]:
+        ms.setdefault(o["name"], []).append(o["ms"])
+print(json.dumps({
+    "queries": {n: min(v) / 1000.0 for n, v in ms.items() if n not in art["errors"]},
+    "errors": art["errors"],
+    "correct": line["correct"],
+    "probes": {k: v for k, v in art["config"].items()
+               if k.startswith(("spin_", "loadavg_"))}}))
+EOF
+)
 
 echo "[pair] duckdb comparator (same window) ..." >&2
 NAMES=$(python3 -c "import json,sys; print(' '.join(sorted(json.loads(sys.argv[1])['queries'])))" "$ENGINE_JSON")
@@ -60,14 +84,17 @@ window = {
     "engine_total_sec": round(et, 3),
     "duckdb_total_sec": round(dt, 3),
     "ratio": round(et / dt, 3) if dt else None,
-    # graft.Bench's own reading of the host: both JVM spin probes, at the
-    # start and the end of the engine leg, under their quiet thresholds.
-    # The ratio stays honest either way (both engines share the window);
-    # the flag says whether the raw totals may be compared across windows.
-    "probe_quiet": eng.get("probe_quiet"),
+    # the engine run's pin check, and its own reading of the host (both
+    # JVM spin probes and the load average, at the start and the end of
+    # the run). The ratio stays honest either way (both engines share the
+    # window); the probes say whether the raw totals may be compared
+    # across windows.
+    "correct": eng["correct"],
+    **eng["probes"],
     "engine_only": sorted(set(eng["queries"]) - set(duck["queries"])),
+    "engine_errors": eng["errors"],
     "duckdb_errors": duck.get("errors", {}),
-    "engine_passes": eng.get("passes"),
+    "engine_passes": [1, 3],
     "engine": eng["queries"],
     "duckdb": duck["queries"],
 }
@@ -96,7 +123,7 @@ if other_sf:
           f"sf={sf}; band covers only sf={sf} windows", file=sys.stderr)
 print(json.dumps({**{k: window[k] for k in
     ("window_utc", "sf", "n_shared", "engine_total_sec",
-     "duckdb_total_sec", "ratio", "probe_quiet")},
+     "duckdb_total_sec", "ratio", "correct")},
     "n_windows": len(runs), "n_windows_at_sf": len(ratios),
     "band": [min(ratios), max(ratios)] if ratios else None}))
 EOF

@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
   * by replicating the FACT tables `factor`× with key offsets (dimensions
   * stay fixed — the realistic shape: facts grow, dims don't), so scaling
   * behavior can be measured beyond the driver-provided SFs with the same
-  * bench harness (`SPARK_GRAFT_SF_DIR=<out> graft.Bench`).
+  * bench harness (`python3 perfbench/run.py --workload query_suite --data
+  * <out> ...`; its pins are sf0.1's, so another scale reports
+  * `correct: false` and only its times count).
   *
   * Replication is deterministic and key-disjoint: replica i offsets every
   * surrogate key by i·10^9. Document text gets a per-replica suffix token

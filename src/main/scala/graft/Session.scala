@@ -12,8 +12,8 @@ object Session {
   /** A session config; callers pick one in code, no setting selects it. */
   sealed abstract class Profile(val logLevel: String)
   object Profile {
-    /** Timed runs (Bench, BenchOne, StreamBench, the perfbench
-      * harness): AQE with partition coalescing, shuffled-hash joins
+    /** Timed runs (the perfbench harness, through `Bench.buildSession`,
+      * and StreamBench): AQE with partition coalescing, shuffled-hash joins
       * preferred, a 64 MB broadcast threshold. */
     case object Bench extends Profile("ERROR")
     /** The oracle compare and the specs (Verify, Explain, ScaleUp,
@@ -53,13 +53,8 @@ object Session {
       case Profile.Check =>
         common + ("spark.sql.shuffle.partitions" -> cpus.toString)
       case Profile.Bench => common ++ Map(
-        // default: one shuffle partition per core. SPARK_GRAFT_SHUFFLE
-        // overrides for large-SF probes — at 1000× base a fixed 32 means
-        // ~19 M-row partitions that spill; sizing partitions to the data
-        // (AQE coalesces the small ones back) is the same knob a cluster
-        // run turns, measured in PERF.md's 1000× relational probe
-        "spark.sql.shuffle.partitions" ->
-          Env.int("SPARK_GRAFT_SHUFFLE", cpus, env).toString,
+        // one shuffle partition per core; AQE coalesces the small ones
+        "spark.sql.shuffle.partitions" -> cpus.toString,
         "spark.sql.adaptive.enabled" -> "true",
         "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
         // shuffled hash join beats sort-merge when neither side needs a sort;

@@ -97,7 +97,7 @@ object Contract {
       }
     }
 
-  /** Loud non-fatal gate for Verify/Bench startup: named mismatches go to
+  /** Loud non-fatal gate for Verify's startup: named mismatches go to
     * stderr (so a regeneration is diagnosed from the first lines of the run
     * log) but execution continues — consumers that dispatch on the scanned
     * type may still be fine, and a partial gate beats an empty one. */

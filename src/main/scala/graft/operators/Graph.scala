@@ -408,7 +408,7 @@ object Graph {
     // union-find rung): under the driver-heap-derived edge cap, collect
     // the canonical edge set and count with the primitive compact-forward
     // kernel — the distributed plan below is ~25 stages of 30–700 ms
-    // each on a graph this size (r15 BenchOne stage profile: wall ≈
+    // each on a graph this size (r15 per-stage profile: wall ≈
     // scheduler floor, e.g. 381 ms wall for 8.0 s of task time over 32
     // tasks moving 3 MB), i.e. pure task/stage overhead, while the local
     // kernel does the same O(Σ od(u)+od(v)) merge work in one process.

@@ -231,7 +231,7 @@ object LangModel {
     // dictionary, not a groupBy + join: the join form planned as two
     // SERIALIZED dictionary-sized single-task stages inside the broadcast
     // build (c1 aggregate ~270 ms, then dict ⋈ broadcast(c1) ~285 ms at
-    // sf0.1 — BenchOne stage profile, r15; both grow with the dictionary
+    // sf0.1 — per-stage profile, r15; both grow with the dictionary
     // at scale), where the window form is one stage over the same rows.
     // Window sum of longs — identical integers to the joined aggregate.
     // lp is also quantized INSIDE the dictionary — floor(1e4·ln(c12/c1))

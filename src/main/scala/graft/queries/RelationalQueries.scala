@@ -1467,8 +1467,8 @@ object RelationalQueries {
     // q25's raw-shuffle plan (same oracle text — one definition). The
     // bucketed write is a memoized one-time per (session, surface) cost,
     // exactly the amortization contract bucketing has in a real
-    // warehouse; Bench's untimed warmup pass absorbs it, so the timed
-    // number is the join the lever buys. ----
+    // warehouse; a bench run's cold pass absorbs it, so the warm passes
+    // time the join the lever buys. ----
     Q("q58_bucketed_join",
       (s, dir) => {
         val (liT, osT) = bucketedQ58Tables(s, dir)

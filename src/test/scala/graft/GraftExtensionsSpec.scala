@@ -3,8 +3,9 @@ package graft
 /** The extension class must make every native expression callable from SQL
   * with no imperative registration anywhere. spark.sql.extensions is a
   * STATIC conf — it only applies when the JVM's first session is built —
-  * so the shared SparkSpec session carries it (as do the Verify/Bench
-  * mains), and this spec asserts the functions resolve there. */
+  * so the shared SparkSpec session carries it (as do the Verify main and
+  * the perfbench session), and this spec asserts the functions resolve
+  * there. */
 class GraftExtensionsSpec extends SparkSpec {
 
   test("native expressions resolve via spark.sql.extensions") {

@@ -31,15 +31,15 @@ class SessionSpec extends AnyFunSuite {
       "spark.sql.autoBroadcastJoinThreshold" -> "67108864",
       "spark.driver.memory" -> "8g")
     assert(Session.conf(Session.Profile.Bench, 6, Map.empty) == want)
-    // the two env knobs the bench profile honours
-    val env = Map("SPARK_GRAFT_SHUFFLE" -> "256", "SPARK_DRIVER_MEM" -> "16g")
-    assert(Session.conf(Session.Profile.Bench, 6, env) == want ++ Map(
-      "spark.sql.shuffle.partitions" -> "256", "spark.driver.memory" -> "16g"))
+    // the one env knob the bench profile honours
+    val env = Map("SPARK_DRIVER_MEM" -> "16g")
+    assert(Session.conf(Session.Profile.Bench, 6, env) ==
+      want + ("spark.driver.memory" -> "16g"))
     assert(Session.Profile.Bench.logLevel == "ERROR")
   }
 
   test("check profile keeps Spark's default planner: no AQE or join overrides") {
-    val env = Map("SPARK_GRAFT_SHUFFLE" -> "256", "SPARK_DRIVER_MEM" -> "16g")
+    val env = Map("SPARK_DRIVER_MEM" -> "16g")
     val got = Session.conf(Session.Profile.Check, 6, env)
     assert(got == common + ("spark.sql.shuffle.partitions" -> "6"))
     assert(!got.keys.exists(k => k.contains("adaptive") || k.contains("join") ||
